@@ -25,7 +25,12 @@ import java.sql.Timestamp
   *    drives a PK dedup window (SURVEY.md §2.5);
   *  - Delta sinks become plain Parquet (no Delta jars in this environment;
   *    the reference only ever full-overwrites, so nothing is lost —
-  *    SURVEY.md §2.1 S7).
+  *    SURVEY.md §2.1 S7);
+  *  - one pass per batch: silver is derived from the cached, audit-enriched
+  *    batch that bronze was written from, not from a read-back of the bronze
+  *    directory (`linehaul_bronze_silver.py:204`), and the bronze write is
+  *    clustered by `year_month`, so each month's file is written by its own
+  *    task, in parallel across the cores.
   */
 object Medallion {
 
@@ -117,10 +122,22 @@ object Medallion {
     * Write hygiene for scale: zstd (better ratio than snappy at similar
     * scan cost) and a per-file record cap so one fat input split can't
     * produce a multi-GB file that defeats downstream split parallelism.
-    * Codec/row-group layout never affects values — oracle parity holds. */
+    * Codec/row-group layout never affects values — oracle parity holds.
+    *
+    * The rows are first hash-clustered by `year_month` into
+    * `defaultParallelism` partitions. Each month then lands in exactly one
+    * task, so a month directory gets one file instead of one per input
+    * split, and the fixed cost of each file (open, footer, commit rename,
+    * permission calls) is paid in parallel across the cores instead of
+    * serially in one task. The partition count is explicit because AQE
+    * coalesces a count-free repartition of a small batch back into one
+    * task. Trade-off at scale: a month is written by a single task, so the
+    * largest month bounds the write's wall (`maxRecordsPerFile` still
+    * splits its output into several files). */
   def writeBronze(df: DataFrame, targetPath: String,
       maxRecordsPerFile: Long = 5000000L): Unit =
-    df.write.mode(SaveMode.Overwrite)
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col("year_month"))
+      .write.mode(SaveMode.Overwrite)
       .option("compression", "zstd")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("year_month").parquet(targetPath)
@@ -223,7 +240,17 @@ object Medallion {
   /** Full source→bronze→silver run for one table over a local/staged CSV
     * (the SFTP download of `linehaul_source_to_bronze.py:44-93` is an
     * environment concern; from the staged file onward the dataflow is
-    * identical). Returns the run report, None if the empty gate fired. */
+    * identical). Returns the run report, None if the empty gate fired.
+    *
+    * One pass over the batch: the CSV is staged (cached) once, bronze is
+    * written from it, and silver is derived from the same cached rows.
+    * Bronze's target is overwritten with exactly this batch, so reading it
+    * back would yield the same rows at the price of a partition-discovery
+    * listing job and a scan of the small files just written. Silver keeps
+    * the read-back's column order (`year_month` last). Its `year_month` is
+    * `date` also for a table without `datecreated`; a read-back infers
+    * `void` (Parquet logical type Null) from that all-null partition.
+    * The staged cache is released on every exit, failures included. */
   def runTable(
       spark: SparkSession, csvPath: String, bronzeBase: String, silverBase: String,
       table: String, database: String, updatedBy: String, updatedOn: Timestamp,
@@ -238,24 +265,22 @@ object Medallion {
       spark.read.format("csv")
         .option("header", true).option("inferSchema", true).load(csvPath))
     nonEmptyOrNone(raw).map { staged =>
-      // A1 count gate via df.observe: the row count rides the bronze
-      // write job as a CollectMetrics node instead of costing its own
-      // count() action over the staged input (one job, not two — at
-      // 100 TB the saved pass is the difference that matters)
-      val obs = org.apache.spark.sql.Observation(s"run_${table}_${t0}")
-      val enriched = enrichAudit(staged, database, updatedBy, updatedOn)
-        .observe(obs, org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-      val bronzeTarget = resolveBronzeTarget(spark, bronzeBase, table, today)
-      writeBronze(enriched, bronzeTarget)
-      val bronze = spark.read.parquet(bronzeTarget)
-      val cfg = cfgOverride.getOrElse(
-        TableConfig.registry.getOrElse(table, TableConfig(table)))
-      val silver = bronzeToSilverDf(bronze, cfg)
-      writeSilver(spark, silver, silverBase, table, today)
-      val n = obs.get("n").asInstanceOf[Long]
-      staged.unpersist()
-      RunReport(table, database, n, (System.nanoTime() - t0) / 1e9)
+      try {
+        val enriched = enrichAudit(staged, database, updatedBy, updatedOn)
+        // A1 count gate via df.observe: the row count rides the bronze
+        // write job as a CollectMetrics node instead of costing its own
+        // count() action over the staged input (one job, not two — at
+        // 100 TB the saved pass is the difference that matters)
+        val obs = org.apache.spark.sql.Observation(s"run_${table}_${t0}")
+        val bronzeTarget = resolveBronzeTarget(spark, bronzeBase, table, today)
+        writeBronze(enriched.observe(obs, count(lit(1)).as("n")), bronzeTarget)
+        val cfg = cfgOverride.getOrElse(
+          TableConfig.registry.getOrElse(table, TableConfig(table)))
+        val bronzeOrder = enriched.columns.filterNot(_ == "year_month") :+ "year_month"
+        val silver = bronzeToSilverDf(enriched.select(bronzeOrder.toIndexedSeq.map(col): _*), cfg)
+        writeSilver(spark, silver, silverBase, table, today)
+        RunReport(table, database, obs.get("n").asInstanceOf[Long], (System.nanoTime() - t0) / 1e9)
+      } finally staged.unpersist()
     }
   }
 }

@@ -16,11 +16,18 @@ final case class TableConfig(
     orderByCol: Seq[String] = Seq("updated_on"))
 
 object TableConfig {
-  /** The 8 claims tables (config.py:36-72). */
-  val registry: Map[String, TableConfig] = Seq(
-    "claim", "claim_activity", "claim_additionalcharge", "claim_additionalinfo",
-    "claim_diary", "claim_document", "claim_payment", "claim_product")
-    .map(n => n -> TableConfig(n)).toMap
+  /** The 8 claims tables (config.py:36-72). `claim` holds one row per
+    * claim and keeps the declared `claimnumber` key. The seven child tables
+    * hold many rows per claim (activities, charges, payments, ...), each
+    * identified by its own `rowid`; keyed by `claimnumber`, as the
+    * reference declares, the dedup would keep one child row per claim and
+    * drop the rest. */
+  val registry: Map[String, TableConfig] =
+    (TableConfig("claim") +: Seq(
+      "claim_activity", "claim_additionalcharge", "claim_additionalinfo",
+      "claim_diary", "claim_document", "claim_payment", "claim_product")
+      .map(TableConfig(_, primaryKey = Seq("rowid"))))
+      .map(c => c.name -> c).toMap
 
   /** SFTP file → table name derivation: `claim.txt` stays `claim`, others
     * insert an underscore (`linehaul_source_to_bronze.py:98-101`). */

@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.{Medallion, RenameMaps, TableConfig}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -109,6 +110,93 @@ class PipelineSpec extends AnyFunSuite {
     val r2 = Medallion.runTable(spark, emptyCsv, s"$tmp/bronze2", s"$tmp/silver2",
       "claim", "db1", "u1", Timestamp.valueOf("2026-01-01 00:00:00"), "2026-08-12")
     assert(r2.isEmpty)
+  }
+
+  test("child tables are keyed by rowid: rows of one claim survive, a re-sent rowid keeps its newest") {
+    assert(TableConfig.registry("claim").primaryKey == Seq("claimnumber"))
+    assert(TableConfig.registry.size == 8)
+    assert(TableConfig.registry.removed("claim").values.forall(_.primaryKey == Seq("rowid")))
+    val (t1, t2) = (Timestamp.valueOf("2026-01-01 06:00:00"), Timestamp.valueOf("2026-01-02 06:00:00"))
+    val bronze = Seq(
+      ("R1", "C1", "received", t1),
+      ("R2", "C1", "inspected", t1),
+      ("R1", "C1", "received-corrected", t2)) // R1 re-sent by a later load
+      .toDF("rowid", "claimnumber", "display", "updated_on")
+    val silver = Medallion.bronzeToSilverDf(bronze, TableConfig.registry("claim_activity"))
+      .select("row_id", "claim_number", "display").as[(String, String, String)].collect().sorted
+    assert(silver.toSeq == Seq(("R1", "C1", "received-corrected"), ("R2", "C1", "inspected")))
+  }
+
+  /** Same row multiset, column by column in order. */
+  private def sameRows(a: DataFrame, b: DataFrame) = {
+    val rows = (df: DataFrame) => df.collect().map(_.toSeq).sortBy(_.mkString("|"))
+    rows(a).sameElements(rows(b))
+  }
+
+  test("writeBronze clusters by year_month: one file per month directory, rows unchanged") {
+    val target = Files.createTempDirectory("clustered").resolve("t").toString
+    val in = Medallion.enrichAudit(
+      spark.range(60).select(col("id"),
+        date_add(lit("2024-01-01").cast("date"), (col("id") * 3).cast("int")).as("datecreated"))
+        .repartition(3),
+      "db", "u", Timestamp.valueOf("2026-01-01 00:00:00"))
+    assert(in.rdd.getNumPartitions == 3)
+    Medallion.writeBronze(in, target)
+    val months = new java.io.File(target).listFiles().filter(_.getName.startsWith("year_month="))
+    assert(months.length >= 6)
+    for (m <- months)
+      assert(m.list().count(_.endsWith(".parquet")) == 1, s"${m.getName} holds more than one file")
+    assert(sameRows(spark.read.parquet(target).select(in.columns.toIndexedSeq.map(col): _*), in))
+  }
+
+  /** Runs one table's day-1 load from an in-memory batch; returns the
+    * written current silver and the silver recomputed from bronze read back. */
+  private def silverAndReadBack(df: DataFrame, table: String) = {
+    val tmp = Files.createTempDirectory("single_pass")
+    val csv = tmp.resolve(s"$table.csv").toString
+    df.coalesce(1).write.option("header", true).csv(csv)
+    val report = Medallion.runTable(spark, csv, s"$tmp/bronze", s"$tmp/silver", table, "db1",
+      "u1", Timestamp.valueOf("2026-01-01 00:00:00"), "2026-08-12")
+    assert(report.exists(_.count == df.count()))
+    val written = spark.read.parquet(s"$tmp/silver/$table/datePart=2026-08-12")
+    val readBack = Medallion.bronzeToSilverDf(
+      spark.read.parquet(s"$tmp/bronze/$table/datePart=Historic"), TableConfig.registry(table))
+    (written, readBack)
+  }
+
+  test("single pass: runTable's silver equals silver built from bronze read back (dated table)") {
+    val (written, readBack) = silverAndReadBack(claims(), "claim")
+    assert(written.columns.sameElements(readBack.columns))
+    assert(written.columns.takeRight(2).toSeq == Seq("year_month", "active"))
+    assert(written.schema("year_month").dataType.typeName == "date")
+    assert(written.count() == 2 && sameRows(written, readBack))
+  }
+
+  test("single pass: a table without datecreated matches too, with year_month now typed date") {
+    val diary = Seq(
+      ("R1", "C1", "2024-01-15", "note"), ("R2", "C1", "2024-01-16", "call"),
+      ("R3", "C2", "2024-02-01", "note"))
+      .toDF("rowid", "claimnumber", "dateof", "category")
+    val (written, readBack) = silverAndReadBack(diary, "claim_diary")
+    assert(written.columns.sameElements(readBack.columns))
+    // partition discovery over the all-null __HIVE_DEFAULT_PARTITION__ infers
+    // void (a Parquet column of logical type Null); the staged batch carries
+    // enrichAudit's null date
+    assert(readBack.schema("year_month").dataType.typeName == "void")
+    assert(written.schema("year_month").dataType.typeName == "date")
+    assert(written.count() == 3 && sameRows(written, readBack))
+  }
+
+  test("runTable releases its staged cache when a write fails") {
+    val tmp = Files.createTempDirectory("cache_owner")
+    val csv = tmp.resolve("claim.csv").toString
+    claims().coalesce(1).write.option("header", true).csv(csv)
+    val notADir = Files.createTempFile(tmp, "silver", ".file").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](Medallion.runTable(spark, csv, s"$tmp/bronze", notADir, "claim",
+      "db1", "u1", Timestamp.valueOf("2026-01-01 00:00:00"), "2026-08-12"))
+    assert(new java.io.File(s"$tmp/bronze/claim/datePart=Historic/_SUCCESS").exists) // silver failed
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
   test("retry succeeds after transient failures and rethrows after exhaustion") {
