@@ -26,7 +26,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
     // optional comma-separated query-name filter (local profiling only;
@@ -36,26 +35,16 @@ object Bench {
     // kill any stale result from a previous (possibly crashed) run first
     try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(outFile))
     catch { case _: Throwable => () }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
 
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       finally spark.catalog.clearCache() // builders may persist() internally
 
     // warm-up: JVM + codegen + first parquet footer reads
-    try run(SparkEntry.queries.head._2) catch { case _: Throwable => () }
-    // pre-build the per-corpus persisted artifacts (hybrid index, recall
-    // truth tables, ExactSubstr gram table) so every per-query time
-    // measures the SERVE path; the one-time build wall rides in the
+    try run(SparkEntry.queries("q01_agg_filter")) catch { case _: Throwable => () }
+    // pre-build the per-corpus persisted artifacts so every per-query
+    // time measures the SERVE path; the one-time build wall rides in the
     // artifact as "build_wall_sec" (round-10 verdict missing #1: stderr
     // prose made round-over-round totals silently non-comparable). A
     // prebuild failure is logged AND flagged as "prebuild_failed": the
@@ -65,9 +54,7 @@ object Bench {
     val buildWall = {
       val t0 = System.nanoTime()
       try {
-        ml.HybridIndex.ensure(spark, sfDir)
-        ml.TruthTables.warm(spark, sfDir)
-        operators.Round9Ops.spanGrams(spark, sfDir).count(): Unit
+        GraftSession.prebuild(spark, sfDir)
         // the q309/q313 lifecycle probes (two real index builds each)
         // run once per (JVM, corpus); the graded queries read the
         // recorded outcomes

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Cross-process artifact-adoption probe (round-13 verdict item #2):
   * q313 grades the cold-JVM adopt/stale lifecycle by dropping the
   * in-memory registry INSIDE one JVM ([[ml.ArtifactStore.dropMemo]]),
@@ -18,16 +16,7 @@ import org.apache.spark.sql.SparkSession
 object CrossJvmProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     val t0 = System.nanoTime()
     val (dir, built) = ml.HybridIndex.ensureTracked(spark, sfDir)
     val wall = (System.nanoTime() - t0) / 1e9

@@ -393,17 +393,7 @@ object ScaleAudit {
     // filtered report is PARTIAL — never commit one as SCALEAUDIT.json)
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_AUDIT_ONLY").map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
 
@@ -422,17 +412,10 @@ object ScaleAudit {
     try {
       SparkEntry.queries(AuditSet.head)(spark, sfA)
         .write.mode("overwrite").format("noop").save()
-      Seq(sfA, sfB, sfC, da, db).foreach { sf =>
-        ml.HybridIndex.ensure(spark, sf)
-        ml.TruthTables.warm(spark, sf)
-        operators.Round9Ops.spanGrams(spark, sf).count(): Unit
-      }
-      // the upsampled point warms everything the 100% point does —
-      // round 13: the recall-truth tables too (fixed 8-query sets, so
-      // the truth build is LINEAR in the corpus; see DocTierUp)
-      ml.HybridIndex.ensure(spark, de)
-      ml.TruthTables.warm(spark, de)
-      operators.Round9Ops.spanGrams(spark, de).count(): Unit
+      // the upsampled point e warms everything the 100% point does,
+      // recall-truth tables included (fixed 8-query sets, so the truth
+      // build is LINEAR in the corpus; see DocTierUp)
+      Seq(sfA, sfB, sfC, da, db, de).foreach(GraftSession.prebuild(spark, _))
     } catch { case e: Throwable =>
       System.err.println(s"[audit] WARM-UP FAILED (measurements may smear): $e")
     }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -11,128 +12,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    operators.Relational.q01AggFilter(spark, "/root/testdata/sf0.001")
+    Relational.q01AggFilter(spark, "/root/testdata/sf0.001")
+
+  /** Every query module, each listed once. No two may define the same
+    * query or oracle key (HarnessSpec checks it). */
+  val modules: Seq[QueryModule] = Seq(
+    Relational, Windows, Scalars, Advanced, TextOps, VectorOps, EventTime,
+    PipelineQueries, MultimodalQueries, ScaleOps, ScaleOps2, Joins2, Tpch2,
+    Tpch3, Tpch4, Curation, CorpusOps, PqOps, HistoryOps, Behavior,
+    Profiling, Linkage, GraphOps, Recsys, Retrieval, Layout, SyncOps,
+    MaintOps, FeatureOps, QualityOps, MlOps, InfraOps, RankOps, NoveltyOps,
+    ChunkOps, WeightOps, AnnAudit, SplitOps, MartOps, EvalOps, MonitorOps,
+    DedupQa, RetrievalQa, CurveOps, SkipOps, EmbedQa, SurvivalOps, GiniOps,
+    Round8Ops, Round9Ops, GovernanceOps, BudgetOps, Round10Ops, Round11Ops,
+    Round12Ops, Round13Ops, Round14Ops, Round15Ops)
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Relational.queries ++
-      operators.Windows.queries ++
-      operators.Scalars.queries ++
-      operators.Advanced.queries ++
-      operators.TextOps.queries ++
-      operators.VectorOps.queries ++
-      operators.EventTime.queries ++
-      operators.PipelineQueries.queries ++
-      operators.MultimodalQueries.queries ++
-      operators.ScaleOps.queries ++
-      operators.ScaleOps2.queries ++
-      operators.Joins2.queries ++
-      operators.Tpch2.queries ++
-      operators.Tpch3.queries ++
-      operators.Tpch4.queries ++
-      operators.Curation.queries ++
-      operators.CorpusOps.queries ++
-      operators.PqOps.queries ++
-      operators.HistoryOps.queries ++
-      operators.Behavior.queries ++
-      operators.Profiling.queries ++
-      operators.Linkage.queries ++
-      operators.GraphOps.queries ++
-      operators.Recsys.queries ++
-      operators.Retrieval.queries ++
-      operators.Layout.queries ++
-      operators.SyncOps.queries ++
-      operators.MaintOps.queries ++
-      operators.FeatureOps.queries ++
-      operators.QualityOps.queries ++
-      operators.MlOps.queries ++
-      operators.InfraOps.queries ++
-      operators.RankOps.queries ++
-      operators.NoveltyOps.queries ++
-      operators.ChunkOps.queries ++
-      operators.WeightOps.queries ++
-      operators.AnnAudit.queries ++
-      operators.SplitOps.queries ++
-      operators.MartOps.queries ++
-      operators.EvalOps.queries ++
-      operators.MonitorOps.queries ++
-      operators.DedupQa.queries ++
-      operators.RetrievalQa.queries ++
-      operators.CurveOps.queries ++
-      operators.SkipOps.queries ++
-      operators.EmbedQa.queries ++
-      operators.SurvivalOps.queries ++
-      operators.GiniOps.queries ++
-      operators.Round8Ops.queries ++
-      operators.Round9Ops.queries ++
-      operators.GovernanceOps.queries ++
-      operators.BudgetOps.queries ++
-      operators.Round10Ops.queries ++
-      operators.Round11Ops.queries ++
-      operators.Round12Ops.queries ++
-      operators.Round13Ops.queries ++
-      operators.Round14Ops.queries ++
-      operators.Round15Ops.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    modules.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    operators.Relational.oracles ++
-      operators.Windows.oracles ++
-      operators.Scalars.oracles ++
-      operators.Advanced.oracles ++
-      operators.TextOps.oracles ++
-      operators.VectorOps.oracles ++
-      operators.EventTime.oracles ++
-      operators.PipelineQueries.oracles ++
-      operators.MultimodalQueries.oracles ++
-      operators.ScaleOps.oracles ++
-      operators.ScaleOps2.oracles ++
-      operators.Joins2.oracles ++
-      operators.Tpch2.oracles ++
-      operators.Tpch3.oracles ++
-      operators.Tpch4.oracles ++
-      operators.Curation.oracles ++
-      operators.CorpusOps.oracles ++
-      operators.PqOps.oracles ++
-      operators.HistoryOps.oracles ++
-      operators.Behavior.oracles ++
-      operators.Profiling.oracles ++
-      operators.Linkage.oracles ++
-      operators.GraphOps.oracles ++
-      operators.Recsys.oracles ++
-      operators.Retrieval.oracles ++
-      operators.Layout.oracles ++
-      operators.SyncOps.oracles ++
-      operators.MaintOps.oracles ++
-      operators.FeatureOps.oracles ++
-      operators.QualityOps.oracles ++
-      operators.MlOps.oracles ++
-      operators.InfraOps.oracles ++
-      operators.RankOps.oracles ++
-      operators.NoveltyOps.oracles ++
-      operators.ChunkOps.oracles ++
-      operators.WeightOps.oracles ++
-      operators.AnnAudit.oracles ++
-      operators.SplitOps.oracles ++
-      operators.MartOps.oracles ++
-      operators.EvalOps.oracles ++
-      operators.MonitorOps.oracles ++
-      operators.DedupQa.oracles ++
-      operators.RetrievalQa.oracles ++
-      operators.CurveOps.oracles ++
-      operators.SkipOps.oracles ++
-      operators.EmbedQa.oracles ++
-      operators.SurvivalOps.oracles ++
-      operators.GiniOps.oracles ++
-      operators.Round8Ops.oracles ++
-      operators.Round9Ops.oracles ++
-      operators.GovernanceOps.oracles ++
-      operators.BudgetOps.oracles ++
-      operators.Round10Ops.oracles ++
-      operators.Round11Ops.oracles ++
-      operators.Round12Ops.oracles ++
-      operators.Round13Ops.oracles ++
-      operators.Round14Ops.oracles ++
-      operators.Round15Ops.oracles
+  lazy val oracleSql: Map[String, String] = modules.flatMap(_.oracles).toMap
 }

@@ -26,26 +26,18 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
-  /** events.ts has shipped with different physical types across fixture
-    * generations: parquet TIMESTAMP(NANOS) (which Spark 4 refuses to read
-    * natively — PARQUET_TYPE_ILLEGAL), and plain TIMESTAMP(MICROS) without
-    * timezone (which Spark reads as TIMESTAMP_NTZ). Adapt to whatever is on
-    * disk and normalize to a session-TZ TIMESTAMP so every downstream
-    * operator sees one stable type. Sessions here run with
-    * spark.sql.session.timeZone=UTC, so the NTZ→TZ cast is value-preserving
-    * and matches what DuckDB computes on the same file. */
-  def events(s: SparkSession, d: String): DataFrame = {
+  /** The events table with `ts` as a session-TZ TIMESTAMP ([[utcTs]]). */
+  def events(s: SparkSession, d: String): DataFrame = utcTs(load(s, d, "events"))
+
+  /** Normalizes an events `ts` column, batch or streaming, to a session-TZ
+    * TIMESTAMP so every downstream operator sees one type. The fixtures
+    * store it as parquet TIMESTAMP(MICROS) without a time zone, which Spark
+    * reads as TIMESTAMP_NTZ; sessions run UTC (GraftSession), so the cast
+    * keeps every value and matches what DuckDB computes on the same file.
+    * A `ts` of epoch nanoseconds as a long converts too. */
+  def utcTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val df =
-      try load(s, d, "events")
-      catch {
-        case scala.util.control.NonFatal(_) =>
-          // Legacy NANOS fixture: the only way in is the nanos-as-long
-          // escape hatch (a session conf; scoped to this fallback path).
-          s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          load(s, d, "events")
-      }
     df.schema("ts").dataType match {
       case LongType         => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))

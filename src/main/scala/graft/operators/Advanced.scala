@@ -15,9 +15,7 @@ import org.apache.spark.sql.functions._
   * amplification — the same plan holds at 100 TB because the window
   * partitions on the high-cardinality key.
   */
-object Advanced {
-  type Q = (SparkSession, String) => DataFrame
-
+object Advanced extends QueryModule {
   /** q26 — as-of join: for every `error` event, the most recent `purchase`
     * event of the same user at or before it. */
   def q26AsOfJoin(s: SparkSession, d: String): DataFrame = {

@@ -10,9 +10,7 @@ import org.apache.spark.sql.functions._
   * fixed-centroid IVF index against brute-force ground truth — the
   * tuning table every vector-search deployment publishes, as a query.
   */
-object AnnAudit {
-  type Q = (SparkSession, String) => DataFrame
-
+object AnnAudit extends QueryModule {
   /** Probe counts on the q247 curve. */
   val Probes = Seq(1, 2, 4)
   /** Neighbors per query for the recall computation. */

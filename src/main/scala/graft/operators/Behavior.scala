@@ -14,9 +14,7 @@ import org.apache.spark.sql.functions._
   * the event/lifecycle queries a production warehouse runs daily on the
   * same tables an LLM-data pipeline curates.
   */
-object Behavior {
-  type Q = (SparkSession, String) => DataFrame
-
+object Behavior extends QueryModule {
   /** q122 — strictly-ordered funnel (view → click → purchase): a user
     * converts at step N only with an event AFTER their step-N-1 time.
     * Each step is a filtered per-user min-timestamp aggregate joined to

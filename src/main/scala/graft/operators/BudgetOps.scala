@@ -14,9 +14,7 @@ import org.apache.spark.sql.functions._
   * accounting throughout; the only doubles are single IEEE divisions of
   * exact terms, micro-rounded once (the q295 discipline).
   */
-object BudgetOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object BudgetOps extends QueryModule {
   /** q300 — tokenizer fertility audit (the compression-ratio table of
     * every multilingual-tokenizer paper: fertility = subword tokens per
     * whitespace word; a language with fertility 3 pays 3× the context

@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   * MinHash-LSH tuning curve (band collisions vs exact similarity), and
   * event-sequence alignment distance.
   */
-object ChunkOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object ChunkOps extends QueryModule {
   /** Boundary modulus for q241 (expected chunk length in tokens). */
   val ChunkMod = 8
 

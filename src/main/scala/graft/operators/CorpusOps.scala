@@ -21,9 +21,7 @@ import org.apache.spark.sql.functions._
   * built on the same portable primitives (tokens/cosine) as the rest of
   * the family.
   */
-object CorpusOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object CorpusOps extends QueryModule {
   /** Paragraph size for q114, in tokens. The fixture text has no sentence
     * or newline structure, so a "paragraph" is a fixed 20-token block
     * (trailing partial block included — every token belongs to exactly

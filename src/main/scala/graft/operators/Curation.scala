@@ -21,9 +21,7 @@ import org.apache.spark.sql.functions._
   * LLM-pipeline extension mandated by BASELINE.json's north star, built on
   * the same portable-hash primitives as the dedup tier.
   */
-object Curation {
-  type Q = (SparkSession, String) => DataFrame
-
+object Curation extends QueryModule {
   /** Decontamination n-gram length. 8 consecutive tokens shared between a
     * training doc and a benchmark doc is near-certain verbatim overlap —
     * chance collision probability over even a 30-word vocabulary is

@@ -10,9 +10,7 @@ import org.apache.spark.sql.functions._
   * curve over quality bands, out-of-fold target encoding, and the
   * shuffle stratification audit.
   */
-object CurveOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object CurveOps extends QueryModule {
   /** Quality bands of the q265 value curve. */
   val CurveBands = 10
 

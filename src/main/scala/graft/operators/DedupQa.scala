@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   * rate. Companions to q242 (LSH S-curve) and q247 (IVF recall) — the
   * queries that justify the production knobs with data.
   */
-object DedupQa {
-  type Q = (SparkSession, String) => DataFrame
-
+object DedupQa extends QueryModule {
   /** Largest cluster audited pairwise in q261 (quadratic guard). */
   val ChainAuditCap = 50
 

@@ -8,9 +8,7 @@ import org.apache.spark.sql.functions._
 /** Representation QA: embedding anisotropy from sufficient statistics
   * and the predictability (conditional entropy) of the event stream.
   */
-object EmbedQa {
-  type Q = (SparkSession, String) => DataFrame
-
+object EmbedQa extends QueryModule {
   /** q270 — embedding anisotropy per label: the mean pairwise dot
     * product computed WITHOUT materializing pairs, via the sufficient
     * statistic Σ_{i≠j} vᵢ·vⱼ = ‖Σv‖² − Σ‖v‖². High anisotropy (all

@@ -8,9 +8,7 @@ import org.apache.spark.sql.functions._
 /** Statistical-evaluation operators: deterministic Poisson-bootstrap
   * confidence intervals and exact AUC via score-histogram rank sums.
   */
-object EvalOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object EvalOps extends QueryModule {
   /** Bootstrap replica count for q255. */
   val BootB = 32
   /** Hash mixing constants (Knuth multiplicative + replica offset). */

@@ -12,9 +12,7 @@ import graft.operators.Det._
   * Structured Streaming (`graft.streaming.EventStream`) — watermarking
   * changes output timing, not values.
   */
-object EventTime {
-  type Q = (SparkSession, String) => DataFrame
-
+object EventTime extends QueryModule {
   /** q60 — tumbling 1-hour windows: count + value sum per (window, type).
     * Spark's `window()` starts are epoch-aligned, same as date_trunc. */
   def q60Tumbling(s: SparkSession, d: String): DataFrame =

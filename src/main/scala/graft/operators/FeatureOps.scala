@@ -12,9 +12,7 @@ import org.apache.spark.sql.functions._
   * custom mergeable array aggregate, and token span offsets for
   * annotation alignment.
   */
-object FeatureOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object FeatureOps extends QueryModule {
   /** HLL register count (m) and rank-source width in bits for q195. */
   val HllM = 64
   val HllW = 24

@@ -10,9 +10,7 @@ import org.apache.spark.sql.functions._
   * across documents, per source — computed from the length histogram,
   * never from a corpus sort.
   */
-object GiniOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object GiniOps extends QueryModule {
   /** q273 — Gini coefficient of document token mass per source: how
     * concentrated is a source's token budget in its longest documents?
     * (G = 0: every doc equal; → 1: one doc carries everything.) The

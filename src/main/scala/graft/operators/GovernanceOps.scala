@@ -13,9 +13,7 @@ import org.apache.spark.sql.functions._
   * out by its visible attributes). All-integer accounting throughout;
   * every micro share is one integer DIV (the q295 discipline).
   */
-object GovernanceOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object GovernanceOps extends QueryModule {
   /** q296 — cross-source duplication matrix (the dedup-policy input:
     * before deduplicating a multi-source corpus you need to know WHICH
     * source pairs share content — dropping CommonCrawl∩Wikipedia dups

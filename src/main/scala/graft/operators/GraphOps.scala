@@ -22,9 +22,7 @@ import org.apache.spark.sql.functions._
   * is truncated each round with a localCheckpoint of the aggregated
   * ranks, which stay |nodes|-bounded.
   */
-object GraphOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object GraphOps extends QueryModule {
   /** PageRank damping factor. */
   val Damping = 0.85
 

@@ -14,9 +14,7 @@ import org.apache.spark.sql.functions._
   * is_current flag. Built here from the events fixture (user_id = key,
   * event_type = tracked attribute).
   */
-object HistoryOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object HistoryOps extends QueryModule {
   /** q108 — SCD Type-2 build: per user, consecutive events with the same
     * event_type collapse into one version row; a version opens when the
     * attribute changes (change-flag + running sum = version number),

@@ -14,9 +14,7 @@ import org.apache.spark.sql.functions._
   * All four are pure integer arithmetic end to end, so every query
   * hash-matches its DuckDB oracle with no float discipline needed.
   */
-object InfraOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object InfraOps extends QueryModule {
   /** Bloom filter geometry for q229: m bits, k hash probes per key. */
   val BloomM = 4096
   val BloomK = 3

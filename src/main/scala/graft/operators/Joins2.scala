@@ -8,9 +8,7 @@ import graft.operators.Det._
 
 /** Join/set-op completion: outer joins, ALL-variant set ops, binned range
   * join, and a typed custom Aggregator. */
-object Joins2 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Joins2 extends QueryModule {
   /** q42 — left + full outer joins with null-aware aggregation: every
     * customer (with or without orders) and order counts; full-outer
     * against a filtered order set to force right-only rows too. */

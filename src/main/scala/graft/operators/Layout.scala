@@ -15,9 +15,7 @@ import org.apache.spark.sql.functions._
   * Resampling onto a regular grid is the feature-engineering primitive
   * behind every windowed training signal over irregular event streams.
   */
-object Layout {
-  type Q = (SparkSession, String) => DataFrame
-
+object Layout extends QueryModule {
   /** q187 — 2-D skyline of part: minimize (p_retailprice, p_size).
     *
     * A row is dominated iff some other part is ≤ on both criteria and

@@ -20,9 +20,7 @@ import org.apache.spark.sql.functions._
   * dynamic-programming semantics in Spark and DuckDB, integer output —
   * no float parity risk at all).
   */
-object Linkage {
-  type Q = (SparkSession, String) => DataFrame
-
+object Linkage extends QueryModule {
   /** Sorted-neighborhood window width: each row meets its next W
     * neighbors in (p_name, p_partkey) order within the p_type block. */
   val W = 3

@@ -16,9 +16,7 @@ import org.apache.spark.sql.functions._
   * self-maintainable under deletes (a retracted maximum needs a rescan),
   * which is exactly why q174 carries `last_order` and this one doesn't.
   */
-object MaintOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object MaintOps extends QueryModule {
   /** q192 — per-customer (n_orders, spend) maintained from an OLD order
     * snapshot plus the q124-shaped CDC delta, instead of re-aggregating
     * the new snapshot.

@@ -10,9 +10,7 @@ import org.apache.spark.sql.functions._
   * a Markov next-event baseline with held-out accuracy, and histogram
   * quantile normalization of document lengths.
   */
-object MartOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object MartOps extends QueryModule {
   /** q252 — the per-source corpus scorecard: one row per source with the
     * metrics a dataset card publishes — volume (docs, tokens), mean
     * length, exact-duplicate ratio, language-mix entropy, and a

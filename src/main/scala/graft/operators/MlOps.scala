@@ -17,9 +17,7 @@ import org.apache.spark.sql.functions._
   * via `floor(x·1e6 + 0.5)` (the Det contract), so all five queries
   * hash-match the DuckDB oracle.
   */
-object MlOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object MlOps extends QueryModule {
   /** Smoothing pseudo-count for q224's target encoder. */
   val EncM = 20.0
 

@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   * the near-dup population two detectors jointly miss, the ROC table of
   * the target-encoder score, and operating-threshold selection.
   */
-object MonitorOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object MonitorOps extends QueryModule {
   /** SPRT hypotheses and (α, β)=(.05,.05) decision boundaries for q257.
     * The four log terms are micro-unit LITERALS computed once here, so
     * both engines accumulate identical integers. */

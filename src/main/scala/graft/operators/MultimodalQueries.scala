@@ -7,9 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Graded queries over the multimodal plumbing. */
-object MultimodalQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object MultimodalQueries extends QueryModule {
   /** q63 — binary columns + typed metadata: byte length, kind routing,
     * metadata projection. Oracle-checkable because the payload synthesis
     * (UTF-8 encode) and metadata arithmetic are engine-portable. */

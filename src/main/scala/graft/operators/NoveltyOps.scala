@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   * the Heaps-law vocabulary growth curve. All integer arithmetic to the
   * last division.
   */
-object NoveltyOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object NoveltyOps extends QueryModule {
   /** q237 — n-gram novelty scoring: for each document (in doc_id ingest
     * order), the fraction of its distinct 8-grams appearing for the
     * FIRST time in the corpus — the memorization/novelty signal used to

@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   * count-gate aggregate (A1) — each through the same `graft.pipeline`
   * code paths the medallion port uses.
   */
-object PipelineQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object PipelineQueries extends QueryModule {
   /** Fixed audit constants so runs are reproducible (the reference uses
     * `datetime.today()` + notebook user — SURVEY.md §7 hard parts). */
   val FixedTs: java.sql.Timestamp = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")

@@ -29,9 +29,7 @@ import org.apache.spark.sql.functions._
   * the only shuffle is the final (qid, vid) pivot-sum at M rows per
   * candidate.
   */
-object PqOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object PqOps extends QueryModule {
   /** Subspace count (64 dims → 4 × 16-dim subvectors). */
   val M = 4
 

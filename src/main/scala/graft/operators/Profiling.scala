@@ -12,9 +12,7 @@ import org.apache.spark.sql.functions._
   * profiling surface; this extends the graded library the same way the
   * curation tier does.
   */
-object Profiling {
-  type Q = (SparkSession, String) => DataFrame
-
+object Profiling extends QueryModule {
   /** q133 — one-pass column profile of `orders`: row count, null count,
     * exact distinct count and numeric min/max per column, unpivoted to
     * one row per column. ONE scan computes every column's stats in a

@@ -8,9 +8,7 @@ import org.apache.spark.sql.functions._
   * referential-integrity audit across the star schema, and point-in-time
   * correct feature/label construction over the event stream.
   */
-object QualityOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object QualityOps extends QueryModule {
   /** q198 — referential-integrity audit: orphan and duplicate-key counts
     * for every FK edge of the schema, as one summary relation.
     *

@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   * contrastive training, reciprocal-rank-fusion hybrid search, and the
   * k-fold split-balance audit.
   */
-object RankOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object RankOps extends QueryModule {
   /** Interpolation weights of the q233 scorer (literals on both engines
     * so no 1−λ subtraction enters the float path). */
   val Lam = 0.7

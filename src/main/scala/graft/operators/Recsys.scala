@@ -21,9 +21,7 @@ import org.apache.spark.sql.functions._
   * pair volume is ≤ Cap²·|baskets| and the (s1, s2) rollup is
   * partial-aggregable; degree tables are |items|-bounded broadcasts.
   */
-object Recsys {
-  type Q = (SparkSession, String) => DataFrame
-
+object Recsys extends QueryModule {
   /** Maximum basket size (distinct items per customer) admitted to pair
     * generation. */
   val BasketCap = 30

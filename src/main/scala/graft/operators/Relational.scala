@@ -14,9 +14,7 @@ import graft.operators.Det._
   * the driver's hash compare; aggregated doubles go through [[Det]] so the
   * values are bit-identical to the single-threaded DuckDB oracle.
   */
-object Relational {
-  type Q = (SparkSession, String) => DataFrame
-
+object Relational extends QueryModule {
   /** q01 — TPC-H-Q1-style scan→filter→hash-agg (pricing summary).
     * Filter is pushed to the parquet scan; aggregation is partial
     * (map-side) then final — one shuffle on the 6-row group key space. */

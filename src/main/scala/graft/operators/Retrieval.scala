@@ -15,9 +15,7 @@ import org.apache.spark.sql.functions._
   * decontamination ("find every document containing this benchmark
   * phrase") where bag-of-words containment (q86) over-matches.
   */
-object Retrieval {
-  type Q = (SparkSession, String) => DataFrame
-
+object Retrieval extends QueryModule {
   /** BM25 free parameters (the Robertson–Walker defaults). */
   val K1 = 1.2
   val B = 0.75

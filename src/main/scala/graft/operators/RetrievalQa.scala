@@ -9,9 +9,7 @@ import org.apache.spark.sql.functions._
 /** Retrieval- and index-QA operators: graded-relevance NDCG for the BM25
   * rankings and the IVF cell-balance audit.
   */
-object RetrievalQa {
-  type Q = (SparkSession, String) => DataFrame
-
+object RetrievalQa extends QueryModule {
   /** NDCG truncation depth. */
   val NdcgK = 10
   /** Rank-discount weights 1/log2(r+1), r = 1..K, as NANO-unit integer

@@ -10,9 +10,7 @@ import org.apache.spark.sql.functions._
   * retrieval-tier shape), the l-diversity governance gate beside q299's
   * k-anonymity, and per-source provenance for q290's duplicated spans.
   */
-object Round10Ops {
-  type Q = (SparkSession, String) => DataFrame
-
+object Round10Ops extends QueryModule {
   /** q305 — the hybrid-index BUILD as a first-class graded operator:
     * [[graft.ml.HybridIndex]] trains the 6-dp Lloyd coarse quantizer
     * (q148's trainer, k/iters = the q274 serving contract), assigns the

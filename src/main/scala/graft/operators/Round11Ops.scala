@@ -15,9 +15,7 @@ import org.apache.spark.sql.functions._
   * artifact by a content fingerprint of its source tables; q309 grades
   * that lifecycle end-to-end.
   */
-object Round11Ops {
-  type Q = (SparkSession, String) => DataFrame
-
+object Round11Ops extends QueryModule {
   /** q309's two corpus versions, sliced from the fixture so the oracle
     * can state the expected index sizes in plain SQL: v1 = the even ids
     * below [[StaleSlice]], v2 = all ids below [[StaleSlice]] (a strict

@@ -13,9 +13,7 @@ import org.apache.spark.sql.functions._
   * weight-aware priority sampling with the subset-sum estimator (q315 —
   * sample once, estimate any slice later).
   */
-object Round12Ops {
-  type Q = (SparkSession, String) => DataFrame
-
+object Round12Ops extends QueryModule {
   /** q313's corpus versions, sliced from the fixture like q309's
     * ([[Round11Ops.StaleSlice]] discipline, a different slice so the two
     * probes never share a scratch corpus): v1 = even ids below

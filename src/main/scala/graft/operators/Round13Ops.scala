@@ -19,9 +19,7 @@ import org.apache.spark.sql.functions._
   * spec-enumerated, and a DuckDB oracle replays the identical noise
   * formula for each.
   */
-object Round13Ops {
-  type Q = (SparkSession, String) => DataFrame
-
+object Round13Ops extends QueryModule {
   // ---- q321: deterministic DP count release ----
 
   /** Release salt: the mechanism is a pure function of (salt, cell), so

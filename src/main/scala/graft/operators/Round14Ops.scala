@@ -36,9 +36,7 @@ import org.apache.spark.sql.functions._
   * secrecy remains the hard precondition of any real privacy claim —
   * the committed fixture salt is grading-only.
   */
-object Round14Ops {
-  type Q = (SparkSession, String) => DataFrame
-
+object Round14Ops extends QueryModule {
   import Round13Ops.{DpSalt, DpScramble, DpD, DpEpsCellMicro, DpDeltaNum,
     dpNoiseSql}
 

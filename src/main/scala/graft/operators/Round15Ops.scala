@@ -27,9 +27,7 @@ import org.apache.spark.sql.functions._
   * identical formulas. [[Round13Ops.DpSalt]] secrecy remains the hard
   * precondition (the committed fixture salt is grading-only).
   */
-object Round15Ops {
-  type Q = (SparkSession, String) => DataFrame
-
+object Round15Ops extends QueryModule {
   import Round13Ops.{DpSalt, DpScramble, DpD, DpEpsCellMicro, DpDeltaNum,
     dpNoiseSql}
 

@@ -10,9 +10,7 @@ import org.apache.spark.sql.functions._
   * IVF index maintenance, and the feature-hashing trick — three more
   * training-data-pipeline primitives, each DuckDB-replayed exactly.
   */
-object Round8Ops {
-  type Q = (SparkSession, String) => DataFrame
-
+object Round8Ops extends QueryModule {
   /** Benchmark-set modulus for q275 (deliberately different from q86's
     * %29 so the two decontamination ops cover different splits). */
   val LshBenchMod = 31

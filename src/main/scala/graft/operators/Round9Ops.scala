@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   * via hash-seeded Gumbel keys — two more training-data-selection
   * primitives, each DuckDB-replayed exactly.
   */
-object Round9Ops {
-  type Q = (SparkSession, String) => DataFrame
-
+object Round9Ops extends QueryModule {
   /** Feature buckets for q285's hashed bag-of-tokens LM (DSIR's hashed
     * n-gram features; 256 keeps the two models broadcast-trivial and
     * collision-rich on the fixture). */

@@ -13,9 +13,7 @@ import graft.operators.Det._
   * (whole-stage-codegen'd); integer-valued results are cast to long where
   * DuckDB widens to BIGINT so result schemas agree.
   */
-object Scalars {
-  type Q = (SparkSession, String) => DataFrame
-
+object Scalars extends QueryModule {
   /** q19 — string functions over part. */
   def q19Strings(s: SparkSession, d: String): DataFrame =
     Tables.part(s, d)

@@ -10,9 +10,7 @@ import org.apache.spark.sql.functions._
   * aggregation (the skew-mitigation pattern, oracle-identical to the
   * direct plan), and sketch aggregates.
   */
-object ScaleOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object ScaleOps extends QueryModule {
   /** Document-frequency cap for shingle inverted indexes: a shingle in
     * more than this many documents (stopword n-grams) is dropped before
     * pair generation, bounding the self-join fanout per key at CAP² and

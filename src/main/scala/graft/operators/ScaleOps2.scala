@@ -16,9 +16,7 @@ import org.apache.spark.sql.functions._
   * deterministic integer-arithmetic core, so each one both scales to a
   * 1000-executor shuffle AND hash-matches a DuckDB oracle bit-for-bit.
   */
-object ScaleOps2 {
-  type Q = (SparkSession, String) => DataFrame
-
+object ScaleOps2 extends QueryModule {
   /** Misra–Gries counters per partition for q179. */
   val MgK = 200
 

@@ -8,9 +8,7 @@ import org.apache.spark.sql.functions._
 /** Layout payoff and ingest integrity: file-skipping effectiveness of
   * the three clustering keys, and the tokenizer round-trip audit.
   */
-object SkipOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object SkipOps extends QueryModule {
   /** Files per layout in q268 (key >> shift ⇒ 16 files). */
   val SkipFiles = 16
   /** Probe points (x, y) — deterministic literals spread over the grid. */

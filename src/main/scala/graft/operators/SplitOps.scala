@@ -10,9 +10,7 @@ import org.apache.spark.sql.functions._
   * stability index, row-level provenance hashing, and a concrete proof
   * that the q195 HLL registers merge losslessly.
   */
-object SplitOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object SplitOps extends QueryModule {
   /** Embargo gap of the q248 purged split, in microseconds (1 day). */
   val EmbargoUs = 86400000000L
 

@@ -9,9 +9,7 @@ import org.apache.spark.sql.functions._
   * right censoring — the time-to-event family, which none of the funnel
   * or cohort queries model (they all condition on the event happening).
   */
-object SurvivalOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object SurvivalOps extends QueryModule {
   /** q272 — Kaplan–Meier time-to-convert, discrete by day: subjects
     * enter at their FIRST view event; the event is their first
     * subsequent purchase; subjects with no purchase are RIGHT-CENSORED

@@ -15,9 +15,7 @@ import org.apache.spark.sql.functions._
   * per-row argmax over a constant shard list — so the expensive step
   * touches only the rows that actually differ / collide / move.
   */
-object SyncOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object SyncOps extends QueryModule {
   /** Rows per checksum block in q189. */
   val BlockSize = 1024
 

@@ -16,9 +16,7 @@ import org.apache.spark.sql.functions._
   * generation (q35) explodes ~4 band rows per doc and joins on band
   * buckets: work is proportional to true collisions, never all-pairs.
   */
-object TextOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextOps extends QueryModule {
   /** q30 — token statistics per document: whitespace tokens, distinct
     * tokens, regex word count, mean token length. */
   def q30TokenStats(s: SparkSession, d: String): DataFrame =

@@ -18,9 +18,7 @@ import graft.operators.Det._
   * unavoidable lineitem/orders aggregations and the lineitem⋈orders
   * equi-join, both AQE-coalesced.
   */
-object Tpch2 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Tpch2 extends QueryModule {
   /** q101 — TPC-H Q5 (local supplier volume): the full 6-table join with
     * the distinctive `c_nationkey = s_nationkey` locality constraint —
     * revenue where customer and supplier share a nation, per nation of an

@@ -29,9 +29,7 @@ import org.apache.spark.sql.functions._
   * relation is computed once and persisted for its three self-join uses
   * (the classic Q21 view); the supplier dimension broadcasts.
   */
-object Tpch3 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Tpch3 extends QueryModule {
   /** Days past the order date after which a shipment counts as late —
     * ~45% of fixture lineitems, so every EXISTS/NOT EXISTS branch in
     * q111/q113 exercises both outcomes. */

@@ -50,9 +50,7 @@ import org.apache.spark.sql.functions._
   * columns; these adapted TPC-H shapes grade the same join/agg machinery
   * at adversarial sizes.
   */
-object Tpch4 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Tpch4 extends QueryModule {
   /** Derived partsupp (see object doc). One hash-aggregate over lineitem. */
   private def partsupp(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)

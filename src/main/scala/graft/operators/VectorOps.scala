@@ -21,9 +21,7 @@ import graft.operators.Det.{Dec, dsumSql}
   * Dot products run in identical sequential double arithmetic in Spark
   * and DuckDB (see [[graft.functions.Portable]]), so results hash-match.
   */
-object VectorOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object VectorOps extends QueryModule {
   /** Sign-bucket width for q37. 16 bits ⇒ 65k blocks per label: at corpus
     * scale the within-block all-pairs cost is bounded (vs 256 blocks at 8
     * bits, millions of vectors per block at 100 TB). */

@@ -7,9 +7,7 @@ import org.apache.spark.sql.functions._
 /** Dedup-aware example weighting (q245): the sampling-weight table that
   * turns near-duplicate clusters into training-time downweights.
   */
-object WeightOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object WeightOps extends QueryModule {
   /** q245 — dedup-aware example weights: every document gets weight
     * 1/|its near-dup cluster| (singletons 1), so a training sampler that
     * honors the table sees each CONTENT item with equal mass no matter

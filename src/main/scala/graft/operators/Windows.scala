@@ -20,9 +20,7 @@ import graft.operators.Det._
   * global (unpartitioned) windows, which would serialize 100 TB through
   * one task.
   */
-object Windows {
-  type Q = (SparkSession, String) => DataFrame
-
+object Windows extends QueryModule {
   /** q14 — PK dedup: latest event per user (the reference's implied
     * upsert/dedup). Deterministic tie-break on event_id. */
   def q14PkDedup(s: SparkSession, d: String): DataFrame = {

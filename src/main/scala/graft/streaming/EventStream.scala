@@ -18,27 +18,11 @@ import org.apache.spark.sql.types._
 object EventStream {
 
   /** Streaming scan of an events parquet directory. Streaming sources
-    * require an explicit schema — no inference pass — so probe the physical
-    * schema with a one-off batch footer read, then adapt: fixtures have
-    * shipped ts as TIMESTAMP(NANOS) (readable only as raw long nanos),
-    * TIMESTAMP(MICROS) without tz (TIMESTAMP_NTZ), or a plain timestamp.
-    * All normalize to a session-TZ TIMESTAMP (sessions run UTC). */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val physical =
-      try spark.read.parquet(dir).schema
-      catch {
-        case scala.util.control.NonFatal(_) =>
-          // Legacy NANOS fixture: only readable via the nanos-as-long hatch.
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          spark.read.parquet(dir).schema
-      }
-    val raw = spark.readStream.schema(physical).parquet(dir)
-    physical("ts").dataType match {
-      case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _                => raw
-    }
-  }
+    * require an explicit schema — no inference pass — so the physical
+    * schema comes from a one-off batch footer read; `ts` is then
+    * normalized as in the batch reader ([[graft.Tables.utcTs]]). */
+  def readEvents(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.utcTs(spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir))
 
   /** Tumbling 1-hour aggregation with a 10-minute watermark — the
     * streaming twin of EventTime.q60. */

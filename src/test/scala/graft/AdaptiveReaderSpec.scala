@@ -4,18 +4,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The events fixture has shipped with three different physical types for
-  * `ts` across driver regenerations: parquet TIMESTAMP(NANOS) (readable by
-  * Spark only as a raw long via the nanos-as-long escape hatch), plain
-  * TIMESTAMP(MICROS) without timezone (TIMESTAMP_NTZ), and a session-TZ
-  * timestamp. [[Tables.events]] and [[streaming.EventStream.readEvents]]
-  * must adapt to whichever is on disk and normalize to one session-TZ
-  * TIMESTAMP — this spec writes the flavors it can synthesize from Spark
-  * (long, NTZ, native) and asserts all three read back value-identical.
-  * The reference's schema-robustness theme (its CSV `inferSchema=True`
-  * ingest, linehaul_source_to_bronze.py:109-141) maps onto exactly this:
-  * a source whose physical types drift between deliveries must not break
-  * the pipeline.
+/** [[Tables.events]] and [[streaming.EventStream.readEvents]] normalize
+  * `ts` to one session-TZ TIMESTAMP whatever its physical type: the
+  * fixtures' TIMESTAMP(MICROS) without time zone (read as TIMESTAMP_NTZ),
+  * a session-TZ timestamp, or epoch nanoseconds stored as a long. This
+  * spec writes the three flavors and asserts they read back
+  * value-identical. The reference's schema-robustness theme (its CSV
+  * `inferSchema=True` ingest, linehaul_source_to_bronze.py:109-141) maps
+  * onto exactly this: a source whose physical types drift between
+  * deliveries must not break the pipeline.
   */
 class AdaptiveReaderSpec extends AnyFunSuite {
   import TestSpark._
@@ -72,5 +69,15 @@ class AdaptiveReaderSpec extends AnyFunSuite {
     writeFlavor(expr("unix_micros(ts) * 1000L"), longDir)
     val stL = streaming.EventStream.readEvents(spark, s"$longDir/events.parquet")
     assert(stL.schema("ts").dataType == TimestampType)
+  }
+
+  test("a failed events read throws and leaves the session conf as it was") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(key)
+    val missing = java.nio.file.Files.createTempDirectory("ev_missing").resolve("absent").toString
+    intercept[Exception](Tables.events(spark, missing))
+    assert(spark.conf.getOption(key) == before)
+    intercept[Exception](streaming.EventStream.readEvents(spark, s"$missing/events.parquet"))
+    assert(spark.conf.getOption(key) == before)
   }
 }

@@ -3,9 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards on the graded-surface contract itself: `SparkEntry.queries` /
-  * `oracleSql` are built by merging per-object Maps with `++`, where a
-  * duplicated key would silently overwrite a query — these checks make
-  * that failure loud. */
+  * `oracleSql` merge the per-module Maps, where a duplicated key would
+  * silently overwrite a query — these checks make that failure loud. */
 class HarnessSpec extends AnyFunSuite {
 
   // Empty since round 8: the five formerly rows-only queries were
@@ -20,6 +19,14 @@ class HarnessSpec extends AnyFunSuite {
     val nums = keys.map(_.takeWhile(_ != '_'))
     val dups = nums.groupBy(identity).filter(_._2.length > 1).keys
     assert(dups.isEmpty, s"colliding query numbers: ${dups.mkString(", ")}")
+  }
+
+  test("no query or oracle key is defined by two modules") {
+    def dups(keys: Seq[String]) = keys.groupBy(identity).collect { case (k, v) if v.size > 1 => k }
+    val q = dups(SparkEntry.modules.flatMap(_.queries.keys))
+    val o = dups(SparkEntry.modules.flatMap(_.oracles.keys))
+    assert(q.isEmpty, s"query keys defined twice: ${q.mkString(", ")}")
+    assert(o.isEmpty, s"oracle keys defined twice: ${o.mkString(", ")}")
   }
 
   test("oracles cover exactly the non-rows-only queries") {

@@ -178,20 +178,22 @@ class PropertySpec extends AnyFunSuite {
         b <- Gen.listOfN(n, Gen.choose(-8.0, 8.0).map(_.toFloat))
       } yield (a.toArray, b.toArray))
     samples(vecGen, 4).foreach { rows =>
+      // double side exercises the mixed float/double accessor path
       val df = rows.toDF("a", "b")
-        // double side exercises the mixed float/double accessor path
         .withColumn("bd", expr("transform(b, x -> CAST(x AS DOUBLE))"))
-        .selectExpr(
-          "dot_a(a, b) AS dn",
-          "aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v) AS dh",
-          "dist_sq_a(a, bd) AS sn",
-          "aggregate(zip_with(a, bd, (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), 0D, (a2, v) -> a2 + v) AS sh")
-      df.collect().foreach { r =>
+      val native = df.selectExpr("dot_a(a, b)", "dist_sq_a(a, bd)").collect()
+      val hof = portable {
+        val h = df.selectExpr(
+          "aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)",
+          "aggregate(zip_with(a, bd, (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), 0D, (a2, v) -> a2 + v)")
+        assert(!hasNativeFold(h), s"HOF side was rewritten:\n${h.queryExecution.optimizedPlan}")
+        h.collect()
+      }
+      assert(native.length == hof.length)
+      native.zip(hof).foreach { case (n, h) =>
         // exact bit equality, not tolerance: same fold order is the claim
-        assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
-          java.lang.Double.doubleToLongBits(r.getDouble(1)))
-        assert(java.lang.Double.doubleToLongBits(r.getDouble(2)) ==
-          java.lang.Double.doubleToLongBits(r.getDouble(3)))
+        (0 to 1).foreach(i => assert(java.lang.Double.doubleToLongBits(n.getDouble(i)) ==
+          java.lang.Double.doubleToLongBits(h.getDouble(i))))
       }
     }
   }

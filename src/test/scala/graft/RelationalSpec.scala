@@ -3,19 +3,29 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide session). */
+/** Shared local session for all suites (one JVM-wide session), built by
+  * the same factory as the graded mains. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `f` with RewriteDotProduct switched off, so higher-order-function
+    * folds stay interpreted: the portable side of a portable-vs-native
+    * comparison. Collect inside `f`; a plan optimized later sees the rule. */
+  def portable[T](f: => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(key, graft.plans.RewriteDotProduct.ruleName)
+    try f finally spark.conf.unset(key)
+  }
+
+  /** Whether `df`'s optimized plan holds a native vector fold. */
+  def hasNativeFold(df: org.apache.spark.sql.DataFrame): Boolean = {
+    import graft.functions.{DistSqA, DotA, DotProductF}
+    df.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists {
+      case _: DotProductF | _: DotA | _: DistSqA => true
+      case _ => false
+    }))
+  }
 }
 
 class RelationalSpec extends AnyFunSuite {
