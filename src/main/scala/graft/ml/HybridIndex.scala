@@ -86,9 +86,8 @@ object HybridIndex {
     val e = Tables.embeddings(s, d)
     // ---- dense half: q148's trainer (6-dp-rounded so the model is
     // engine-exact), then the one-shot literal-centroid corpus assign
-    val (centsDf, _) = KMeansIvf.fit(e, "vec_id", "embedding",
-      k = RankOps.HybridK, iters = RankOps.HybridIters,
-      trackInertia = false, roundCentroids = true)
+    val centsDf = KMeansIvf.fit(e, "vec_id", "embedding",
+      k = RankOps.HybridK, iters = RankOps.HybridIters)
     centsDf.coalesce(1).write.mode("overwrite").parquet(dir + "/centroids")
     val m: Seq[Seq[Double]] = centsDf.collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1).map(_._2).toIndexedSeq

@@ -53,15 +53,14 @@ object KMeansIvf {
   }
 
   /** Train k centroids with `iters` Lloyd iterations. Returns the centroid
-    * table (cluster, cent: array<double>) plus per-iteration inertia.
-    * `trackInertia = false` skips the per-iteration inertia action (one
-    * whole Spark job per iteration) — callers that only want the model
-    * (q67's search path) train in iters jobs instead of 2×iters.
-    * `roundCentroids = true` rounds every updated mean to 6 dp (the q21
-    * cross-engine float discipline): partial-sum order makes raw means
-    * differ from a serial engine in the last ulp, and rounding pins the
-    * model — and therefore every cell assignment — across engines, which
-    * is what lets q148 hash-check the assignment phase in DuckDB.
+    * table (cluster, cent: array<double>). Every updated mean is rounded
+    * to 6 dp (the q21 cross-engine float discipline): partial-sum order
+    * makes raw means differ from a serial engine in the last ulp, and
+    * rounding pins the model — and therefore every cell assignment —
+    * across engines, which is what lets q148 hash-check the assignment
+    * phase in DuckDB. The loop stays off [[graft.operators.Iterate]]: its
+    * state is the driver-side model, whose `collect()` already cuts the
+    * lineage, and it has no cap or probe.
     * Caveat (the honest form of the claim): rounding an engine-dependent
     * double to 6 dp is a probabilistic equalizer, not a guarantee — a
     * mean lying within an ulp of a .5e-6 boundary can still round
@@ -72,8 +71,7 @@ object KMeansIvf {
     * ulp of a boundary] ~ k·dim·iters·2^-33 for these magnitudes), not
     * unconditionally; a production pipeline that must be replayable
     * freezes the trained model as data instead of re-deriving it. */
-  def fit(data: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int,
-      trackInertia: Boolean = true, roundCentroids: Boolean = false): (DataFrame, Seq[Double]) = {
+  def fit(data: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int): DataFrame = {
     val spark = data.sparkSession
     graft.functions.VectorExpressions.registerAny(spark)
     import spark.implicits._
@@ -87,29 +85,22 @@ object KMeansIvf {
       .select(expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))").as("cent"))
       .collect().zipWithIndex
       .map { case (r, i) => i -> r.getSeq[Double](0) }.toIndexedSeq
-    var inertias = List.empty[Double]
     for (_ <- 1 to iters) {
-      val centroids = model.toDF("cluster", "cent")
-      val assigned0 = assign(cached, centroids, idCol, vecCol)
-      val assigned = if (trackInertia) assigned0.persist() else assigned0
-      if (trackInertia)
-        inertias ::= assigned.agg(sum(col("dist_sq"))).head().getDouble(0)
+      val assigned = assign(cached, model.toDF("cluster", "cent"), idCol, vecCol)
       // new centroid = per-dimension mean of members
       val members = cached.join(assigned.select(col(idCol), col("cluster")), idCol)
-      val mean = avg(col("x").cast("double"))
       val updated = members
         .select(col("cluster"), posexplode(col(vecCol)).as(Seq("dim", "x")))
         .groupBy(col("cluster"), col("dim"))
-        .agg((if (roundCentroids) round(mean, 6) else mean).as("m"))
+        .agg(round(avg(col("x").cast("double")), 6).as("m"))
         .groupBy(col("cluster"))
         .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dims"))
         .select(col("cluster"), expr("transform(dims, d -> d.m)").as("cent"))
         .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-      if (trackInertia) assigned.unpersist()
       // an empty cluster keeps its previous centroid instead of vanishing
       model = model.map { case (c, prev) => c -> updated.getOrElse(c, prev) }
     }
     cached.unpersist()
-    (model.toDF("cluster", "cent"), inertias.reverse)
+    model.toDF("cluster", "cent")
   }
 }

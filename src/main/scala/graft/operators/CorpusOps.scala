@@ -186,9 +186,9 @@ object CorpusOps extends QueryModule {
     * removals when cells are fine enough, which is the evidence the
     * cluster-then-prune recipe is robust to the choice of quantizer.
     *
-    * FULLY hash-checked since round 8 (formerly rows-only): training with
-    * `roundCentroids = true` pins every Lloyd mean to 6 dp on both
-    * engines (the q148/q67 discipline), so cell boundaries, within-cell
+    * FULLY hash-checked since round 8 (formerly rows-only): training
+    * pins every Lloyd mean to 6 dp on both engines (the q148/q67
+    * discipline), so cell boundaries, within-cell
     * pair cosines, removal sets — and the agreement stats against the
     * fixed-centroid q115 run — match the oracle's k-parametric
     * unrolled-CTE replay (k is data-dependent, so the oracle derives it
@@ -205,8 +205,7 @@ object CorpusOps extends QueryModule {
       .select(col("vec_id").as("vid"), col("embedding").as("ve"))
     val k = math.max(4, math.min(64,
       math.ceil(vecs.count() / SemDedupCellSize.toDouble).toInt))
-    val (model, _) = graft.ml.KMeansIvf.fit(
-      vecs, "vid", "ve", k = k, iters = 3, trackInertia = false, roundCentroids = true)
+    val model = graft.ml.KMeansIvf.fit(vecs, "vid", "ve", k = k, iters = 3)
     val trained = model.select(col("cluster").cast("long").as("centroid_id"), col("cent"))
     val (audit, removedT) = semDedupPrune(trained, vecs)
     val fixedCents = e.filter(col("vec_id") < 16)

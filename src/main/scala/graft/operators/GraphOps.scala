@@ -18,9 +18,10 @@ import org.apache.spark.sql.functions._
   * (rank × N), so the 6-dp fixed-point [[Det]] sums and per-iteration
   * rounding that pin cross-engine bit parity keep real precision at any
   * N — with the raw 1/N scale, 6 dp would quantize away the signal on a
-  * large graph (and N itself never needs to reach the driver). Lineage
-  * is truncated each round with a localCheckpoint of the aggregated
-  * ranks, which stay |nodes|-bounded.
+  * large graph (and N itself never needs to reach the driver). The
+  * loops run on [[Iterate]], which truncates each round's lineage; the
+  * per-round state (ranks, distances, edges) stays |nodes|- or
+  * |edges|-bounded.
   */
 object GraphOps extends QueryModule {
   /** PageRank damping factor. */
@@ -29,26 +30,35 @@ object GraphOps extends QueryModule {
   /** Fixed Lloyd-style iteration count — unrolled in the oracle. */
   val Iters = 3
 
-  /** q151 — 3-iteration PageRank, top-20 nodes. Output node ids are
-    * prefixed strings ('c' customers, 's' suppliers); INTERNALLY the
-    * loop runs on integer-encoded keys (customer 2k, supplier 2k+1 —
-    * q297's encoding, measured ~2× on the same graph: the iteration
-    * shuffles/sorts the edge list repeatedly and fixed-width longs beat
-    * strings on every exchange). The node partition is bijective, every
-    * per-node contribution sum is an order-independent fixed-point
-    * [[Det.dsum]] and every new rank is rounded to 6 dp, so per-node
-    * ranks are bit-identical; the prefixed string is re-derived BEFORE
-    * the top-20 sort, so the (rank DESC, node-string) tie-break — and
-    * therefore the selected rows and their numbering — is unchanged
-    * from the all-string form the oracle replays. */
-  def q151Pagerank(s: SparkSession, d: String): DataFrame = {
+  /** The symmetric customer↔supplier co-purchase edge list (a, b): one
+    * edge per distinct (o_custkey, l_suppkey) pair of orders⋈lineitem, in
+    * both directions. Nodes are integer-encoded, customer 2k and supplier
+    * 2k+1 (disjoint by parity): the graph loops shuffle and sort the edge
+    * list every round, and fixed-width long keys measured about 2× faster
+    * than 'c'/'s'-prefixed strings on the same graph at sf0.1. Callers
+    * choose how to keep it (persist, repartition, checkpoint). */
+  private def coPurchaseEdges(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
     val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
     val e0 = li.join(o, col("l_orderkey") === col("o_orderkey"))
       .select((col("o_custkey").cast("long") * 2).as("a"),
         (col("l_suppkey").cast("long") * 2 + 1).as("b"))
       .distinct()
-    val edges = e0.unionAll(e0.select(col("b").as("a"), col("a").as("b")))
+    e0.unionAll(e0.select(col("b").as("a"), col("a").as("b")))
+  }
+
+  /** q151 — 3-iteration PageRank, top-20 nodes. Output node ids are
+    * prefixed strings ('c' customers, 's' suppliers); INTERNALLY the
+    * loop runs on the integer-encoded keys of [[coPurchaseEdges]]. The
+    * node partition is bijective, every per-node contribution sum is an
+    * order-independent fixed-point [[Det.dsum]] and every new rank is
+    * rounded to 6 dp, so per-node
+    * ranks are bit-identical; the prefixed string is re-derived BEFORE
+    * the top-20 sort, so the (rank DESC, node-string) tie-break — and
+    * therefore the selected rows and their numbering — is unchanged
+    * from the all-string form the oracle replays. */
+  def q151Pagerank(s: SparkSession, d: String): DataFrame = {
+    val edges = coPurchaseEdges(s, d)
     val deg = edges.groupBy(col("a").as("node")).agg(count(lit(1)).as("d"))
     // the degree is constant across iterations: fold it onto the edge
     // list ONCE, so each round joins a single table — and the persisted
@@ -56,15 +66,13 @@ object GraphOps extends QueryModule {
     // ranks join then reuses without re-shuffling the edges
     val edgesW = edges.join(deg.withColumnRenamed("node", "a"), "a").persist()
     val base = lit(1.0 - Damping) // mean-1 scaling: (1-d) replaces (1-d)/N
-    var ranks = edgesW.select(col("a").as("node")).distinct()
+    val ranks0 = edgesW.select(col("a").as("node")).distinct()
       .select(col("node"), lit(1.0).as("rank"))
-    for (_ <- 1 to Iters) {
-      val contrib = edgesW
-        .join(ranks.withColumnRenamed("node", "a"), "a")
+    val ranks = Iterate.fixed(Iters, ranks0) { ranks =>
+      edgesW.join(ranks.withColumnRenamed("node", "a"), "a")
         .select(col("b").as("node"), (col("rank") / col("d")).as("c"))
-      ranks = contrib.groupBy(col("node"))
+        .groupBy(col("node"))
         .agg(round(base + lit(Damping) * Det.dsum(col("c")), 6).as("rank"))
-        .localCheckpoint()
     }
     // Top-20 via orderBy+limit → TakeOrderedAndProject (per-partition
     // heaps, only 20 rows ever reach the driver-side merge) instead of an
@@ -73,11 +81,12 @@ object GraphOps extends QueryModule {
     // window input is pre-bounded at 20 rows; (rank, node) is a unique
     // sort key so the numbering is deterministic. The prefixed STRING id
     // is restored here — before the sort — so ties order exactly as the
-    // all-string pipeline did.
+    // all-string pipeline did. `node >> 1` is the key of either parity
+    // (2k → k, 2k+1 → k).
     val top = ranks
-      .withColumn("node",
-        when(col("node") % 2 === 0, concat(lit("c"), expr("node div 2")))
-          .otherwise(concat(lit("s"), expr("(node - 1) div 2"))))
+      .withColumn("node", concat(
+        when(col("node") % 2 === 0, lit("c")).otherwise(lit("s")),
+        shiftright(col("node"), 1)))
       .orderBy(col("rank").desc, col("node")).limit(20)
     val w = Window.orderBy(col("rank").desc, col("node"))
     top.withColumn("rnk", row_number().over(w))
@@ -240,26 +249,16 @@ object GraphOps extends QueryModule {
     * aggregate, and the explicit depth bound guarantees termination.
     * Level-synchronous frontier expansion with a bounded frontier is
     * exactly the distributed BFS pattern (Pregel supersteps); the
-    * declarative-iteration twin of q151's hand-rolled loop. */
+    * declarative-iteration twin of q151's [[Iterate]] loop. */
   def q176RecursiveBfs(s: SparkSession, d: String): DataFrame = {
     // Pre-materialize the edge list: Spark's recursive execution
     // (UnionLoopExec) re-evaluates referenced subplans each iteration, so
     // leaving the orders⋈lineitem distinct inside the WITH would re-run
     // that join once per BFS level (measured 5.6 s → 1.6 s at sf0.1).
     // Persisted + registered as a view, the recursion scans the cached
-    // |E|-bounded edge table per level instead.
-    val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-    val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-    // Integer-encoded node keys (customer 2k, supplier 2k+1 — the
-    // q297/q151 encoding; the bijection preserves reachability and the
-    // graded output is depth COUNTS, so no string ever needs restoring):
-    // the recursion shuffles the frontier and dedups every level, and
-    // fixed-width longs beat prefixed strings on each of those exchanges.
-    // Seed 'c1' = customer 1 → 2.
-    val e0 = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey").cast("long") * 2).as("a"),
-        (col("l_suppkey").cast("long") * 2 + 1).as("b"))
-      .distinct()
+    // |E|-bounded edge table per level instead. The integer encoding
+    // preserves reachability and the graded output is depth COUNTS, so no
+    // string ever needs restoring. Seed 'c1' = customer 1 → 2.
     // Pre-shuffle the edge table on the join key ONCE (q151's edgesW
     // discipline): the cached partitioning satisfies every level's join
     // requirement, so each BFS level shuffles only the |V|-bounded
@@ -268,7 +267,7 @@ object GraphOps extends QueryModule {
     // broadcast threshold and re-shuffles all of E per level (measured
     // by the round-9 scale audit: 68× shuffle growth at 10× input,
     // back to ~edge-linear with the repartition).
-    e0.unionAll(e0.select(col("b").as("a"), col("a").as("b")))
+    coPurchaseEdges(s, d)
       .repartition(col("a"))
       .persist().createOrReplaceTempView("edges_bfs")
     s.sql(
@@ -309,23 +308,14 @@ object GraphOps extends QueryModule {
     val pairs = TextOps.lshVerifiedPairs(TextOps.lshDocs(s, d))
       .select(col("da"), col("db"))
     // child > parent orientation (da < db in q35 output)
-    var e = pairs.select(col("db").as("c"), col("da").as("p"))
+    val e0 = pairs.select(col("db").as("c"), col("da").as("p"))
       .distinct().localCheckpoint(true)
     // no checkpoint: read once by the final labeling join, and its
-    // lineage is one distinct over the already-checkpointed initial e —
+    // lineage is one distinct over the already-checkpointed initial e0 —
     // an eager checkpoint here was a whole extra job for nothing
-    val verts = e.select(col("c").as("id")).union(e.select(col("p").as("id")))
+    val verts = e0.select(col("c").as("id")).union(e0.select(col("p").as("id")))
       .distinct()
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < 30) {
-      // Loop internals kept EXACTLY as audited (eager per-phase
-      // checkpoints + two exceptAll probes): an attempted "one action
-      // per round" rewrite (lazy-persisted ls, lazy-checkpointed ss,
-      // single full-outer diff probe) measured 8–24% SLOWER in
-      // interleaved A/B at sf0.1 — the lazily-persisted ls is computed
-      // by two branches of the same probe job concurrently, doubling
-      // its work, while the eager checkpoint computes it exactly once.
+    val e = Iterate.untilFixpoint(cap = 30, probeEvery = 1, e0) { e =>
       // large-star: per node u over its UNDIRECTED neighborhood,
       // re-attach every strictly larger neighbor to min(Γ(u) ∪ {u})
       val g = e.select(col("c").as("u"), col("p").as("v"))
@@ -333,20 +323,17 @@ object GraphOps extends QueryModule {
       val m = g.groupBy(col("u")).agg(least(min(col("v")), first(col("u"))).as("m"))
       val ls = g.join(m, "u").filter(col("v") > col("u"))
         .select(col("v").as("c"), col("m").as("p"))
-        .distinct().localCheckpoint(true)
+        .distinct().localCheckpoint(true) // read twice by small-star
       // small-star: per child over its PARENTS, re-attach child and
       // non-min parents to the min parent
       val pm = ls.groupBy(col("c")).agg(min(col("p")).as("m"))
-      val ss = ls.join(pm, "c")
+      ls.join(pm, "c")
         .select(col("p").as("c2"), col("m"))
         .filter(col("c2") =!= col("m"))
         .select(col("c2").as("c"), col("m").as("p"))
         .union(pm.select(col("c"), col("m").as("p")))
-        .distinct().localCheckpoint(true)
-      changed = !(ss.exceptAll(e).isEmpty && e.exceptAll(ss).isEmpty)
-      e = ss
-      rounds += 1
-    }
+        .distinct()
+    } { (e, ss) => ss.exceptAll(e).isEmpty && e.exceptAll(ss).isEmpty }
     val lab = e.groupBy(col("c").as("id")).agg(min(col("p")).as("cluster_id"))
     verts.join(lab, Seq("id"), "left")
       .select(col("id").as("doc_id"),
@@ -390,7 +377,8 @@ object GraphOps extends QueryModule {
     * each round's join reuses the layout without re-shuffling the edges).
     * A fixed round count R yields "shortest distance using ≤ R edges" —
     * deterministic and exactly mirrored by the oracle's unrolled CTEs;
-    * run-to-fixpoint is the q194 while-loop variant of the same rounds.
+    * run-to-fixpoint is q194's [[Iterate.untilFixpoint]] form of the
+    * same rounds.
     * Per-order edge fan-out is bounded by lines-per-order (≤ 7 here), so
     * the pair self-join cannot blow up on a hot order key.
     */
@@ -411,20 +399,16 @@ object GraphOps extends QueryModule {
       .unionAll(weighted.select(col("v").as("u"), col("u").as("v"), col("w")))
       .repartition(col("u"))
       .persist()
-    var dist = Tables.supplier(s, d)
+    val source = Tables.supplier(s, d)
       .agg(min(col("s_suppkey")).as("node"))
       .select(col("node"), lit(0L).as("dist"))
-    for (_ <- 1 to SsspRounds) {
-      // renamed frontier columns keep the self-join unambiguous; the
-      // eager per-round checkpoint materializes the |reached|-bounded
-      // frontier and truncates lineage (measured faster than both the
-      // lazy and no-checkpoint variants at sf0.1)
+    val dist = Iterate.fixed(SsspRounds, source) { dist =>
+      // renamed frontier columns keep the self-join unambiguous
       val frontier = dist.select(col("node").as("fn"), col("dist").as("fd"))
       val relaxed = frontier.join(edges, col("fn") === col("u"))
         .select(col("v").as("node"), (col("fd") + col("w")).as("dist"))
-      dist = dist.unionAll(relaxed)
+      dist.unionAll(relaxed)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
     }
     dist.select(col("node").as("s_suppkey"), col("dist")).orderBy(col("s_suppkey"))
   }
@@ -474,47 +458,34 @@ object GraphOps extends QueryModule {
     * nodes by final degree with global accounting (initial nodes, core
     * size, min surviving degree, convergence).
     *
-    * Node ids are INTEGER-encoded (customer 2k, supplier 2k+1 —
-    * disjoint by parity) rather than q151's 'c'/'s'-prefixed strings:
-    * the peeling loop shuffles and sorts the edge list 8 times, and
-    * fixed-width long keys measured ~2× faster than strings end-to-end
-    * at sf0.1.
+    * Node ids are the integer keys of [[coPurchaseEdges]] (customer 2k,
+    * supplier 2k+1), not q151's 'c'/'s'-prefixed output strings: the
+    * peeling loop shuffles and sorts the edge list 8 times.
     *
     * Scale shape per peel (the q194 large-star/small-star argument):
     * one partial-aggregable degree count + two shuffle semi-joins on
     * the node key — and the edge set SHRINKS monotonically, so later
-    * peels cost less than earlier ones. Peel count is a constant;
-    * every iteration's edges are eagerly localCheckpoint'd to truncate
-    * the reuse (degree pass + two probes read the same set). Degrees
-    * are exact integers — nothing to round. */
+    * peels cost less than earlier ones. Peel count is a constant
+    * ([[Iterate.fixed]]). Degrees are exact integers — nothing to
+    * round. */
   def q297KCore(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-    val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-    val e0 = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey").cast("long") * 2).as("a"),
-        (col("l_suppkey").cast("long") * 2 + 1).as("b"))
-      .distinct()
-    // localCheckpoint (eager), not persist: each peel's edge set is
-    // consumed three times (degree pass + two semi-join probes) and
-    // feeds the next peel — lazy caching would stack four nested
-    // InMemoryRelations whose re-planning dominated the runtime
-    // (measured 13.8 s → 3.9 s at sf0.1, with the integer keys); the
-    // q151/q176 discipline.
-    var edges = e0.unionAll(e0.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint()
-    // n_nodes0 comes from the first peel's degree table (every node of a
-    // symmetric edge list appears as `a`) — no extra distinct pass
-    var n0: DataFrame = null
-    for (i <- 1 to KCorePeels) {
+    // checkpointed like every peel's edges: each edge set is read three
+    // times (degree pass + two semi-join probes) and feeds the next peel
+    val edges0 = coPurchaseEdges(s, d).localCheckpoint()
+    // every peel's degree table, in peel order: n_nodes0 comes from the
+    // first (every node of a symmetric edge list appears as `a`), so no
+    // extra distinct pass
+    val degs = Seq.newBuilder[DataFrame]
+    val edges = Iterate.fixed(KCorePeels, edges0) { edges =>
       val deg = edges.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
         .localCheckpoint() // |nodes|-bounded; reused by n0 + both probes
-      if (i == 1) n0 = deg.agg(count(lit(1)).as("n_nodes0"))
+      degs += deg
       val keep = deg.filter(col("deg") >= KCoreK).select(col("node"))
-      edges = edges
+      edges
         .join(keep.withColumnRenamed("node", "ka"), col("a") === col("ka"), "left_semi")
         .join(keep.withColumnRenamed("node", "kb"), col("b") === col("kb"), "left_semi")
-        .localCheckpoint()
     }
+    val n0 = degs.result().head.agg(count(lit(1)).as("n_nodes0"))
     val degF = edges.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
       .persist()
     val glob = degF.agg(count(lit(1)).as("n_core"), min(col("deg")).as("min_deg"))

@@ -158,8 +158,7 @@ object PqOps extends QueryModule {
   def q149IvfPqSearch(s: SparkSession, d: String): DataFrame = {
     import graft.ml.KMeansIvf
     val e = Tables.embeddings(s, d)
-    val (cents0, _) = KMeansIvf.fit(e, "vec_id", "embedding", k = 8, iters = 3,
-      trackInertia = false, roundCentroids = true)
+    val cents0 = KMeansIvf.fit(e, "vec_id", "embedding", k = 8, iters = 3)
     val cents = cents0.persist()
     val assigned = KMeansIvf.assign(e, cents, "vec_id", "embedding")
       .select(col("vec_id").as("aid"), col("cluster"))

@@ -155,8 +155,7 @@ object Round8Ops extends QueryModule {
     val e = Tables.embeddings(s, d)
     val state = e.filter(pmod(col("vec_id"), lit(IvfDeltaMod)) =!= 0)
     val delta = e.filter(pmod(col("vec_id"), lit(IvfDeltaMod)) === 0)
-    val (cents, _) = KMeansIvf.fit(state, "vec_id", "embedding", k = 8, iters = 3,
-      trackInertia = false, roundCentroids = true)
+    val cents = KMeansIvf.fit(state, "vec_id", "embedding", k = 8, iters = 3)
     val nState = KMeansIvf.assign(state, cents, "vec_id", "embedding")
       .groupBy(col("cluster")).agg(count(lit(1)).as("n_state"))
     val nDelta = KMeansIvf.assign(delta, cents, "vec_id", "embedding")

@@ -693,8 +693,7 @@ object Round9Ops extends QueryModule {
   def q291CoverageSample(s: SparkSession, d: String): DataFrame = {
     import graft.ml.KMeansIvf
     val e = Tables.embeddings(s, d)
-    val (cents, _) = KMeansIvf.fit(e, "vec_id", "embedding", k = 8, iters = 3,
-      trackInertia = false, roundCentroids = true)
+    val cents = KMeansIvf.fit(e, "vec_id", "embedding", k = 8, iters = 3)
     val assigned = KMeansIvf.assign(e, cents, "vec_id", "embedding")
       .select(col("vec_id"), col("cluster")).persist()
     val q0 = floor(sqrt(col("n_in_cell").cast("double"))).cast("long")
@@ -899,8 +898,7 @@ object Round9Ops extends QueryModule {
   def q293EmbedOutliers(s: SparkSession, d: String): DataFrame = {
     import graft.ml.KMeansIvf
     val e = Tables.embeddings(s, d)
-    val (cents, _) = KMeansIvf.fit(e, "vec_id", "embedding", k = 8, iters = 3,
-      trackInertia = false, roundCentroids = true)
+    val cents = KMeansIvf.fit(e, "vec_id", "embedding", k = 8, iters = 3)
     val assigned = KMeansIvf.assign(e, cents, "vec_id", "embedding")
       .select(col("vec_id"), col("cluster"), round(col("dist_sq"), 6).as("dist6"))
       .persist()

@@ -337,64 +337,47 @@ object TextOps extends QueryModule {
     * per-round work is two small joins and the convergence probe is an
     * aggregate — no data ever collects to the driver. Round count is
     * bounded by the dup-graph diameter (dup clusters are tiny by nature;
-    * the iteration cap is a safety net, convergence is checked). The
-    * oracle computes the same components with a recursive CTE. */
+    * a cluster too wide for the 20-round cap fails the query instead of
+    * returning partial labels). The oracle computes the same components
+    * with a recursive CTE. */
   def q55DupClusters(s: SparkSession, d: String): DataFrame =
     clustersFromPairs(lshVerifiedPairs(lshDocs(s, d))).orderBy(col("doc_id"))
 
   /** Min-label-propagation connected components over a verified pair
     * set: (id, label), clustered docs only. Shared by every consumer of
     * q55's clustering (q178/q184/q245/q261) so each embeds ONE LSH+CC
-    * subplan instead of rebuilding its own (§2.4). */
+    * subplan instead of rebuilding its own (§2.4). Throws
+    * `IllegalStateException` if the labels still change after 20 rounds
+    * (a component of diameter above 20). */
   private[operators] def ccLabels(pairs: DataFrame): DataFrame = {
-    // localCheckpoint (eager) after every round: iterative DataFrames must
-    // truncate lineage, or round r's logical plan embeds the whole LSH
-    // pipeline plus r-1 rounds of joins — analysis/planning cost grows per
-    // round and any partial evaluation replays everything (this took q55
-    // from 20 s to ~2 s at sf0.1 beyond the LSH itself)
-    // Kept as an eager UNPARTITIONED localCheckpoint after an r16
-    // experiment (guide §1.1: the "ideal plan" is usually slower at
-    // first): `repartition(db).persist()` — the q151/q176/q203 edge
-    // discipline, which provably lets the per-round edges⋈labels join
+    // An eager UNPARTITIONED checkpoint of the edges: the r16 alternative
+    // `repartition(db).persist()` lets the per-round edges⋈labels join
     // reuse the cached partitioning once labels outgrow the broadcast
-    // threshold (plans/r16/ccLabels_round1_atscale_*.txt) — measured
-    // 1.13× SLOWER across the five consumers at sf0.1 (control 1.06):
-    // the IMR columnar encode/decode per round plus the up-front
-    // shuffle outweigh the reuse while labels still broadcast, and a
+    // threshold (plans/r16/ccLabels_round1_atscale_*.txt), but measured
+    // 1.13× SLOWER across the five consumers at sf0.1 (control 1.06): the
+    // IMR columnar encode/decode per round plus the up-front shuffle
+    // outweigh the reuse while labels still broadcast, and a
     // localCheckpoint cannot carry the partitioning instead (it reports
     // UnknownPartitioning under AQE). At a scale where labels stop
     // broadcasting, revisit the persist form.
     val edges = pairs.select(col("da"), col("db"))
       .union(pairs.select(col("db").as("da"), col("da").as("db")))
       .localCheckpoint(true)
-    var labels = edges.select(col("da").as("id")).distinct()
+    val labels0 = edges.select(col("da").as("id")).distinct()
       .withColumn("label", col("id")).localCheckpoint(true)
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < 20) {
+    // Probes every 2nd round: min-label propagation rarely converges
+    // before round 3, and one probe job materializes both pending rounds.
+    Iterate.untilFixpoint(cap = 20, probeEvery = 2, labels0) { labels =>
       val nbrMin = edges.join(labels, edges("db") === labels("id"))
         .groupBy(edges("da").as("nid")).agg(min(col("label")).as("nbr"))
       // carry the previous label through the update so the convergence
-      // probe is a filter over the checkpoint instead of a second join
-      // against the old labels. LAZY checkpoint: the probe action right
-      // below is what materializes it — an eager checkpoint would run a
-      // separate job per round just to write the same blocks the probe
-      // then re-reads (measured ~15% of q55 at sf0.1)
-      val next = labels.join(nbrMin, labels("id") === nbrMin("nid"), "left")
+      // probe is a filter over the new state instead of a second join
+      // against the old labels
+      labels.join(nbrMin, labels("id") === nbrMin("nid"), "left")
         .select(col("id"), col("label").as("old"),
           least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
-        .localCheckpoint(false)
-      rounds += 1
-      // probe convergence every 2nd round (§2.6: each probe is a
-      // driver-synchronized barrier — a full-cluster sync at scale — and
-      // min-label propagation rarely converges before round 3; the probe
-      // job also materializes BOTH pending lazy checkpoints at once). A
-      // post-fixpoint round is an identity, so the labels are unchanged.
-      if (rounds % 2 == 0 || rounds >= 20)
-        converged = next.filter(col("label") =!= col("old")).isEmpty
-      labels = next.select(col("id"), col("label"))
-    }
-    labels
+    } { (_, next) => next.filter(col("label") =!= col("old")).isEmpty }
+      .select(col("id"), col("label"))
   }
 
   /** [[ccLabels]] + cluster sizes, columns (doc_id, cluster_id,

@@ -155,9 +155,9 @@ object VectorOps extends QueryModule {
     * q38 grid built once per corpus), so the graded plan here contains
     * no corpus-sized build.
     *
-    * FULLY hash-checked since round 8 (formerly rows-only): training with
-    * `roundCentroids = true` pins every Lloyd mean to 6 dp on both
-    * engines (the q148 discipline), which makes the model — and therefore
+    * FULLY hash-checked since round 8 (formerly rows-only): training
+    * pins every Lloyd mean to 6 dp on both engines (the q148
+    * discipline), which makes the model — and therefore
     * the probed cells, the in-cell cosine ranking, AND the recall
     * integers — match the oracle's unrolled-CTE replay (on the fixture
     * and with overwhelming probability in general; see the boundary
@@ -166,8 +166,7 @@ object VectorOps extends QueryModule {
   def q67IvfSearch(s: SparkSession, d: String): DataFrame = {
     import graft.ml.KMeansIvf
     val e = Tables.embeddings(s, d)
-    val (cents, _) = KMeansIvf.fit(e, "vec_id", "embedding", k = 8, iters = 3,
-      trackInertia = false, roundCentroids = true)
+    val cents = KMeansIvf.fit(e, "vec_id", "embedding", k = 8, iters = 3)
     val centsB = cents.persist()
     val assigned = KMeansIvf.assign(e, centsB, "vec_id", "embedding")
       .select(col("vec_id").as("cid"), col("cluster"))
@@ -252,8 +251,8 @@ object VectorOps extends QueryModule {
   /** q148 — the deterministic half of q67, split out so the oracle can
     * hash-check it (the q93 precedent: q67 stays rows-only because
     * recall@5 transits floats; the ASSIGNMENT phase does not have to).
-    * Same trainer, same k/iters as q67, but with `roundCentroids = true`:
-    * every Lloyd mean is rounded to 6 dp on both engines, which pins the
+    * Same trainer, same k/iters as q67: every Lloyd mean is rounded to
+    * 6 dp on both engines, which pins the
     * model bit-identical and makes each vector's final cell — and its
     * (identically-folded, then rounded) distance — exact-comparable.
     * The oracle unrolls all 3 Lloyd iterations as SQL CTEs: seed = first
@@ -264,8 +263,7 @@ object VectorOps extends QueryModule {
   def q148IvfAssign(s: SparkSession, d: String): DataFrame = {
     import graft.ml.KMeansIvf
     val e = Tables.embeddings(s, d)
-    val (cents, _) = KMeansIvf.fit(e, "vec_id", "embedding", k = 8, iters = 3,
-      trackInertia = false, roundCentroids = true)
+    val cents = KMeansIvf.fit(e, "vec_id", "embedding", k = 8, iters = 3)
     KMeansIvf.assign(e, cents, "vec_id", "embedding")
       .select(col("vec_id"), col("cluster").cast("long").as("cluster"),
         round(col("dist_sq"), 6).as("dist6"))
@@ -335,8 +333,7 @@ object VectorOps extends QueryModule {
   def q215LabelProp(s: SparkSession, d: String): DataFrame = {
     import graft.ml.KMeansIvf
     val e = Tables.embeddings(s, d)
-    val (cents, _) = KMeansIvf.fit(e, "vec_id", "embedding", k = 8, iters = 3,
-      trackInertia = false, roundCentroids = true)
+    val cents = KMeansIvf.fit(e, "vec_id", "embedding", k = 8, iters = 3)
     val assigned = KMeansIvf.assign(e, cents, "vec_id", "embedding")
       .select(col("vec_id"), col("cluster"))
     val wl = e.select(col("vec_id"), col("embedding"), col("label"))

@@ -9,7 +9,13 @@ class KMeansSpec extends AnyFunSuite {
 
   test("k-means: inertia is non-increasing and assignment partitions the data") {
     val e = Tables.embeddings(spark, sf)
-    val (centroids, inertias) = KMeansIvf.fit(e, "vec_id", "embedding", k = 4, iters = 3)
+    // inertia of the models after 1, 2 and 3 Lloyd iterations
+    def inertiaByIters(): Seq[Double] = (1 to 3).map { iters =>
+      val c = KMeansIvf.fit(e, "vec_id", "embedding", k = 4, iters = iters)
+      KMeansIvf.assign(e, c, "vec_id", "embedding").agg(sum(col("dist_sq"))).head().getDouble(0)
+    }
+    val centroids = KMeansIvf.fit(e, "vec_id", "embedding", k = 4, iters = 3)
+    val inertias = inertiaByIters()
     assert(centroids.count() == 4)
     assert(inertias.length == 3)
     assert(inertias.zip(inertias.tail).forall { case (a, b) => b <= a + 1e-6 },
@@ -18,7 +24,8 @@ class KMeansSpec extends AnyFunSuite {
     assert(assigned.count() == e.count())
     assert(assigned.select(countDistinct(col("cluster"))).head().getLong(0) <= 4)
     // refit with same inputs is bit-identical (deterministic training)
-    val (c2, i2) = KMeansIvf.fit(e, "vec_id", "embedding", k = 4, iters = 3)
+    val c2 = KMeansIvf.fit(e, "vec_id", "embedding", k = 4, iters = 3)
+    val i2 = inertiaByIters()
     assert(i2 == inertias)
     val a = centroids.orderBy("cluster").collect().map(_.toString)
     val b = c2.orderBy("cluster").collect().map(_.toString)

@@ -509,8 +509,7 @@ class StreamingSpec extends AnyFunSuite {
     val state = e.filter(pmod(col("vec_id"), lit(Round8Ops.IvfDeltaMod)) =!= 0)
     val delta = e.filter(pmod(col("vec_id"), lit(Round8Ops.IvfDeltaMod)) === 0)
       .select(col("vec_id"), col("embedding"))
-    val (centsDf, _) = graft.ml.KMeansIvf.fit(state, "vec_id", "embedding",
-      k = 8, iters = 3, trackInertia = false, roundCentroids = true)
+    val centsDf = graft.ml.KMeansIvf.fit(state, "vec_id", "embedding", k = 8, iters = 3)
     val model: Seq[Seq[Double]] = centsDf.collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1).map(_._2).toIndexedSeq
     // two micro-batches: counts must accumulate across the boundary

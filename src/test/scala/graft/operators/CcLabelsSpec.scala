@@ -4,12 +4,12 @@ import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Focused tests for the r16 [[TextOps.ccLabels]] internals: the edge set
-  * is pre-partitioned on the per-round join key and convergence is probed
-  * every 2nd round instead of every round — neither may change the
-  * fixpoint. A long path graph needs one propagation round per hop
-  * (min-label travels one edge per round), so diameter-7/8 paths exercise
-  * several probe-skipped rounds and both convergence parities. */
+/** Focused tests for the [[TextOps.ccLabels]] internals: convergence is
+  * probed every 2nd round instead of every round, which may not change the
+  * fixpoint, and a graph too wide for the round cap fails. A long path
+  * graph needs one propagation round per hop (min-label travels one edge
+  * per round), so diameter-7/8 paths exercise several probe-skipped rounds
+  * and both convergence parities. */
 class CcLabelsSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -39,15 +39,12 @@ class CcLabelsSpec extends AnyFunSuite {
       20L -> 20L, 21L -> 20L, 30L -> 30L, 31L -> 30L, 32L -> 30L))
   }
 
-  test("a 25-hop path hits the 20-round cap identically at both probe parities") {
-    // the safety cap must bind at exactly 20 rounds regardless of the
-    // probe cadence: on a 26-node path the min label cannot reach the far
-    // end, and the partial labeling after 20 rounds is what both the
-    // every-round and every-2nd-round probe forms produce
+  test("a 25-hop path throws at the 20-round cap") {
+    // on a 26-node path the min label needs 25 rounds to reach the far
+    // end; the cap binds at round 20 and must fail loudly, not return the
+    // partial labeling
     val pairs = (1L to 25L).map(i => (i, i + 1))
-    val got = labelsOf(pairs)
-    // node k receives label max(1, k - 20) after 20 min-propagation rounds
-    val want = (1L to 26L).map(k => k -> math.max(1L, k - 20L)).toMap
-    assert(got == want)
+    val err = intercept[IllegalStateException](labelsOf(pairs))
+    assert(err.getMessage.contains("20 rounds"), err.getMessage)
   }
 }
