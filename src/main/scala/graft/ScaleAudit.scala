@@ -209,24 +209,11 @@ object ScaleAudit {
     }
     // df-capped 3-gram shingle pair rows, q40 (winnowPairs' discipline
     // on the shingle inverted index: the pair join's true work set)
-    def shinglePairs(s: SparkSession, d: String): Long = {
-      import graft.functions.Portable.{tokens, polyHash, P}
-      val tok = Tables.documents(s, d)
-        .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-      val dict = tok.select(col("tok")).distinct().withColumn("h", polyHash(col("tok")))
-      val wp = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("pos"))
-      tok.join(broadcast(dict), "tok")
-        .withColumn("h1", lead(col("h"), 1).over(wp))
-        .withColumn("h2", lead(col("h"), 2).over(wp))
-        .filter(col("h2").isNotNull)
-        .select(col("doc_id"),
-          ((col("h") * 31 + col("h1")) % P * 31 + col("h2")) % P as "sh")
-        .distinct()
+    def shinglePairs(s: SparkSession, d: String): Long =
+      operators.Lsh.shingles(operators.Lsh.tokenHashes(Tables.documents(s, d)))
         .groupBy(col("sh")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= operators.ScaleOps.ShingleDfCap)
         .agg(sum(col("df") * (col("df") - 1) / 2)).head().getDouble(0).toLong
-    }
     Map(
       "q151_pagerank" -> csEdges, "q176_recursive_bfs" -> csEdges,
       // q297 peels the same symmetrized co-purchase edge set csEdges

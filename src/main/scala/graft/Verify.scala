@@ -30,6 +30,14 @@ object Verify {
         } catch { case _: Throwable => () }
       } finally spark.catalog.clearCache() // builders may persist() internally
     }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(only))
+    spark.stop()
+  }
+
+  /** The oracle_sql.json text: the oracle of every query `only` selects
+    * (all of them when it is None), so a filtered run checks only what it
+    * ran. */
+  def oracleJson(only: Option[Set[String]]): String = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -42,9 +50,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    SparkEntry.oracleSql
+      .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -115,38 +115,16 @@ object ChunkOps extends QueryModule {
     * exact verify, so cost is within a constant of q35 itself.
     */
   def q242LshTuning(s: SparkSession, d: String): DataFrame = {
-    val tok = Tables.documents(s, d)
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-    val dict = tok.select(col("tok")).distinct().withColumn("h", polyHash(col("tok")))
-    val wp = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val sh0 = tok.join(broadcast(dict), "tok")
-      .withColumn("h1", lead(col("h"), 1).over(wp))
-      .withColumn("h2", lead(col("h"), 2).over(wp))
-      .filter(col("h2").isNotNull)
-      .select(col("doc_id"),
-        (((col("h") * 31 + col("h1")) % P) * 31 + col("h2")).mod(P).as("sh"))
-      .distinct()
-    val hot = sh0.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > ScaleOps.ShingleDfCap).select(col("sh"))
-    val shingles = sh0.join(broadcast(hot), Seq("sh"), "left_anti")
-    val sigAggs = (0 until 8).map(i =>
-      min((lit(MinHashA(i)) * col("sh") + lit(MinHashB(i))) % P).as(s"sig$i"))
-    val docs = shingles.groupBy(col("doc_id"))
-      .agg(sigAggs.head, (sigAggs.tail :+ collect_set(col("sh")).as("sh_set")): _*)
-      .persist()
-    val bands = docs.select(col("doc_id"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"), col(s"sig${2 * b}").as("v0"), col(s"sig${2 * b + 1}").as("v1"))): _*)).as("bk"))
+    val sh0 = Lsh.shingles(Lsh.tokenHashes(Tables.documents(s, d)))
+    val docs = Lsh.signatures(Lsh.dropHot(sh0, Lsh.hot(sh0))).persist()
+    val bands = docs.select(col("doc_id"), Lsh.bandKey)
     val cand = bands.as("l").join(bands.as("r"),
         col("l.bk") === col("r.bk") && col("l.doc_id") < col("r.doc_id"))
       .groupBy(col("l.doc_id").as("da"), col("r.doc_id").as("db"))
       .agg(count(lit(1)).as("nbands"))
     val a = docs.select(col("doc_id").as("da"), col("sh_set").as("sa"))
     val b = docs.select(col("doc_id").as("db"), col("sh_set").as("sb"))
-    val jac = cand.join(a, "da").join(b, "db")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("double"))
-      .withColumn("jac", round(col("inter") /
-        (size(col("sa")) + size(col("sb")) - col("inter")), 6))
+    val jac = Lsh.withJaccard(cand.join(a, "da").join(b, "db"))
       .withColumn("jac_decile",
         least(lit(9), floor(col("jac") * 10).cast("int")).cast("long"))
     jac.groupBy(col("nbands"), col("jac_decile"))

@@ -34,7 +34,7 @@ object DedupQa extends QueryModule {
     // docs relation already carries the identical df-capped sh_set
     // (§2.4: remove redundant passes).
     val docs = TextOps.lshDocs(s, d)
-    val clusters = TextOps.clustersFromPairs(TextOps.lshVerifiedPairs(docs))
+    val clusters = TextOps.clustersFromPairs(Lsh.verifiedPairs(docs))
       .filter(col("cluster_size") <= ChainAuditCap)
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
     val sets = docs.select(col("doc_id"), col("sh_set").as("shs"))
@@ -42,12 +42,9 @@ object DedupQa extends QueryModule {
         col("a.cluster_id") === col("b.cluster_id") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.cluster_id").as("cid"), col("a.cluster_size").as("csize"),
         col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-    val scored = pairs
+    val scored = Lsh.withJaccard(pairs
       .join(sets.select(col("doc_id").as("da"), col("shs").as("sa")), "da")
-      .join(sets.select(col("doc_id").as("db"), col("shs").as("sb")), "db")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("double"))
-      .withColumn("jac", round(col("inter") /
-        (size(col("sa")) + size(col("sb")) - col("inter")), 6))
+      .join(sets.select(col("doc_id").as("db"), col("shs").as("sb")), "db"))
     scored.groupBy(col("csize"))
       .agg(countDistinct(col("cid")).as("n_clusters"),
         count(lit(1)).as("n_pairs"),

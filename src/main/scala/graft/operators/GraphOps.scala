@@ -305,7 +305,7 @@ object GraphOps extends QueryModule {
   def q194CcTwoPhase(s: SparkSession, d: String): DataFrame = {
     // unordered pairs (q35 minus its output sort — the edge set is
     // distinct()ed right below, so the sort bought nothing)
-    val pairs = TextOps.lshVerifiedPairs(TextOps.lshDocs(s, d))
+    val pairs = Lsh.verifiedPairs(TextOps.lshDocs(s, d))
       .select(col("da"), col("db"))
     // child > parent orientation (da < db in q35 output)
     val e0 = pairs.select(col("db").as("c"), col("da").as("p"))

@@ -95,9 +95,10 @@ object MonitorOps extends QueryModule {
     // each is read twice (its own count + the overlap join), and without
     // the persist the n1 and m aggregates re-ran the whole LSH verify —
     // and n2/m the whole SimHash self-join — from scratch.
-    val th = TextOps.tokenHashRel(s, d).persist()
+    val th = Lsh.tokenHashes(Tables.documents(s, d)).persist()
     // detector 1: LSH + exact-verify pairs (q35 body)
-    val p1 = TextOps.lshVerifiedPairs(TextOps.lshDocsFrom(TextOps.shingleSet(th)))
+    val sh0 = Lsh.shingles(th)
+    val p1 = Lsh.verifiedPairs(Lsh.signatures(Lsh.dropHot(sh0, Lsh.hot(sh0))).persist())
       .select(col("da"), col("db")).persist()
     // detector 2: SimHash 30-bit exact-collision pairs (q36 semantics)
     val sigs = th

@@ -248,20 +248,8 @@ object RankOps extends QueryModule {
   private[operators] def hybridRanks(s: SparkSession, d: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
     import graft.functions.VectorExpressions.cosineF
-    // dict-encoded 3-gram shingle postings (the q229/q86 pattern: hash
-    // each DISTINCT token once, fold grams from lead windows)
-    val tok = Tables.documents(s, d)
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-    val dict = tok.select(col("tok")).distinct().withColumn("h", polyHash(col("tok")))
-    val wp = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val postings = tok.join(broadcast(dict), "tok")
-      .withColumn("h2", lead(col("h"), 1).over(wp))
-      .withColumn("h3", lead(col("h"), 2).over(wp))
-      .filter(col("h3").isNotNull)
-      .select(col("doc_id"),
-        (((col("h") * 31 + col("h2")) % P) * 31 + col("h3")).mod(P).as("sh"))
-      .distinct()
-      .persist()
+    // dict-encoded 3-gram shingle postings
+    val postings = Lsh.shingles(Lsh.tokenHashes(Tables.documents(s, d))).persist()
     val sz = postings.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
     val qPost = postings.filter(col("doc_id") % 97 === 0)
       .select(col("doc_id").as("qid"), col("sh"))
@@ -573,10 +561,7 @@ object RankOps extends QueryModule {
       .select(col("qid"), col("cid"))
     // ---- lexical leg: the persisted MinHash signature table, banded
     val docsSig = HybridIndex.docsSig(s, d)
-    val bands = docsSig.select(col("doc_id"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"), col(s"sig${2 * b}").as("v0"),
-          col(s"sig${2 * b + 1}").as("v1"))): _*)).as("bk"))
+    val bands = docsSig.select(col("doc_id"), Lsh.bandKey)
     val qbands = bands.filter(col("doc_id") < HybridQueryCap)
       .select(col("doc_id").as("qid"), col("bk").as("qbk"))
     val lcand = bands.join(broadcast(qbands), col("bk") === col("qbk"))

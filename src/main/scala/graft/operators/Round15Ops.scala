@@ -574,20 +574,8 @@ object Round15Ops extends QueryModule {
     * the streaming twin uses the row-local array pipeline, which yields
     * the SAME distinct set per document — the deltaDedupStream
     * argument, parity spec-asserted). */
-  def eraseShingles(s: SparkSession, d: String): DataFrame = {
-    val tok = Tables.documents(s, d)
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-    val dict = tok.select(col("tok")).distinct()
-      .withColumn("h", polyHash(col("tok")))
-    val wp = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    tok.join(broadcast(dict), "tok")
-      .withColumn("h1", lead(col("h"), 1).over(wp))
-      .withColumn("h2", lead(col("h"), 2).over(wp))
-      .filter(col("h2").isNotNull)
-      .select(col("doc_id"),
-        ((col("h") * 31 + col("h1")) % P * 31 + col("h2")) % P as "sh")
-      .distinct()
-  }
+  def eraseShingles(s: SparkSession, d: String): DataFrame =
+    Lsh.shingles(Lsh.tokenHashes(Tables.documents(s, d)))
 
   def q337BandErasure(s: SparkSession, d: String): DataFrame = {
     import Round14Ops.DelMod
@@ -602,17 +590,12 @@ object Round15Ops extends QueryModule {
     // the FROZEN index statistics: full-corpus hot list (small by the
     // df-cap construction — a broadcastable model table)
     val hot = dfreq.filter(col("df") > EraseDfCap).persist()
-    def bandsFor(docsSh: DataFrame): DataFrame = {
-      val capped = docsSh.join(broadcast(hot.select(col("sh"))), Seq("sh"), "left_anti")
-      val sigAggs = (0 until 8).map(i =>
-        min((lit(MinHashA(i)) * col("sh") + lit(MinHashB(i))) % P).as(s"sig$i"))
-      capped.groupBy(col("doc_id")).agg(sigAggs.head, sigAggs.tail: _*)
-        .select(col("doc_id"), explode(array((0 until 4).map(b =>
-          struct(lit(b.toLong).as("band"), col(s"sig${2 * b}").as("v0"),
-            col(s"sig${2 * b + 1}").as("v1"))): _*)).as("bk"))
+    def bandsFor(docsSh: DataFrame): DataFrame =
+      Lsh.dropHot(docsSh, hot.select(col("sh"))).groupBy(col("doc_id"))
+        .agg(Lsh.minHashAggs.head, Lsh.minHashAggs.tail: _*)
+        .select(col("doc_id"), Lsh.bandKey)
         .select(col("doc_id"), col("bk.band").as("band"),
           col("bk.v0").as("v0"), col("bk.v1").as("v1"))
-    }
     val bandsAll = bandsFor(sh0).persist()
     val bucketKey = polyHash(concat_ws("|", col("band").cast("string"),
       col("v0").cast("string"), col("v1").cast("string")))

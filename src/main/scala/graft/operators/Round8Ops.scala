@@ -33,29 +33,9 @@ object Round8Ops extends QueryModule {
     * The oracle replays the identical integer LSH pipeline, so candidate
     * sets match exactly — no recall slack is claimed. */
   def q275LshDecontaminate(s: SparkSession, d: String): DataFrame = {
-    val tok = Tables.documents(s, d)
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-    val dict = tok.select(col("tok")).distinct().withColumn("h", polyHash(col("tok")))
-    val wp = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val sh0 = tok.join(broadcast(dict), "tok")
-      .withColumn("h1", lead(col("h"), 1).over(wp))
-      .withColumn("h2", lead(col("h"), 2).over(wp))
-      .filter(col("h2").isNotNull)
-      .select(col("doc_id"),
-        ((col("h") * 31 + col("h1")) % P * 31 + col("h2")) % P as "sh")
-      .distinct()
-    val hot = sh0.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > ScaleOps.ShingleDfCap).select(col("sh"))
-    val shingles = sh0.join(broadcast(hot), Seq("sh"), "left_anti")
-    val sigAggs = (0 until 8).map(i =>
-      min((lit(MinHashA(i)) * col("sh") + lit(MinHashB(i))) % P).as(s"sig$i"))
-    val docsSig = shingles.groupBy(col("doc_id"))
-      .agg(sigAggs.head, (sigAggs.tail :+ collect_set(col("sh")).as("sh_set")): _*)
-      .persist()
-    val bands = docsSig.select(col("doc_id"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"), col(s"sig${2 * b}").as("v0"),
-          col(s"sig${2 * b + 1}").as("v1"))): _*)).as("bk"))
+    val sh0 = Lsh.shingles(Lsh.tokenHashes(Tables.documents(s, d)))
+    val docsSig = Lsh.signatures(Lsh.dropHot(sh0, Lsh.hot(sh0))).persist()
+    val bands = docsSig.select(col("doc_id"), Lsh.bandKey)
     val benchBands = bands.filter(col("doc_id") % LshBenchMod === 0)
       .select(col("doc_id").as("bench_id"), col("bk").as("qbk"))
     val cand = bands.filter(col("doc_id") % LshBenchMod =!= 0)
@@ -65,7 +45,7 @@ object Round8Ops extends QueryModule {
     val verified = cand
       .join(docsSig.select(col("doc_id").as("train_id"), col("sh_set").as("sa")), "train_id")
       .join(docsSig.select(col("doc_id").as("bench_id"), col("sh_set").as("sb")), "bench_id")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
+      .withColumn("inter", Lsh.overlap.cast("long"))
       .withColumn("den", size(col("sa")).cast("long") + size(col("sb")) - col("inter"))
       .withColumn("jac_micro",
         when(col("den") === 0, lit(0L)).otherwise(

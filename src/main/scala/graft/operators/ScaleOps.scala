@@ -3,7 +3,6 @@ package graft.operators
 import graft.Tables
 import graft.functions.Portable._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Scale-pattern operators: direct n-gram Jaccard dedup, salted two-stage
@@ -25,25 +24,14 @@ object ScaleOps extends QueryModule {
     * hot shingles removed by the df-cap — then exact Jaccard ≥ 0.5.
     * This is the ground-truth dedup; q35 is its sub-linear approximation. */
   def q40NgramJaccard(s: SparkSession, d: String): DataFrame = {
-    val tok = Tables.documents(s, d)
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-    val dict = tok.select(col("tok")).distinct().withColumn("h", polyHash(col("tok")))
-    val wp = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val sh0 = tok.join(broadcast(dict), "tok")
-      .withColumn("h1", lead(col("h"), 1).over(wp))
-      .withColumn("h2", lead(col("h"), 2).over(wp))
-      .filter(col("h2").isNotNull)
-      .select(col("doc_id"), ((col("h") * 31 + col("h1")) % P * 31 + col("h2")) % P as "sh")
-      .distinct()
+    val sh0 = Lsh.shingles(Lsh.tokenHashes(Tables.documents(s, d)))
       // both the hot-shingle count and the anti-join read this relation;
       // without the persist the tokenize+window pipeline runs twice
       // (measured 2.2 s → 1.7 s at sf0.1). Harness clearCache() releases it.
       .persist()
     // df-cap: the hot list is tiny (stopword shingles), so the filter is a
     // broadcast anti-join — one extra map-side-combinable count shuffle
-    val hot = sh0.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > ShingleDfCap).select(col("sh"))
-    val sh = sh0.join(broadcast(hot), Seq("sh"), "left_anti").persist()
+    val sh = Lsh.dropHot(sh0, Lsh.hot(sh0)).persist()
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val common = sh.as("a").join(sh.as("b"),
         col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
@@ -99,20 +87,8 @@ object ScaleOps extends QueryModule {
     * Scoring over the CAPPED shingle space (like q40) keeps both engines
     * on identical sets; inter/min is one IEEE division, hash-exact. */
   def q163Containment(s: SparkSession, d: String): DataFrame = {
-    val tok = Tables.documents(s, d)
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-    val dict = tok.select(col("tok")).distinct().withColumn("h", polyHash(col("tok")))
-    val wp = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val sh0 = tok.join(broadcast(dict), "tok")
-      .withColumn("h1", lead(col("h"), 1).over(wp))
-      .withColumn("h2", lead(col("h"), 2).over(wp))
-      .filter(col("h2").isNotNull)
-      .select(col("doc_id"), ((col("h") * 31 + col("h1")) % P * 31 + col("h2")) % P as "sh")
-      .distinct()
-      .persist()
-    val hot = sh0.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > ShingleDfCap).select(col("sh"))
-    val sh = sh0.join(broadcast(hot), Seq("sh"), "left_anti").persist()
+    val sh0 = Lsh.shingles(Lsh.tokenHashes(Tables.documents(s, d))).persist()
+    val sh = Lsh.dropHot(sh0, Lsh.hot(sh0)).persist()
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val common = sh.as("a").join(sh.as("b"),
         col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
@@ -538,14 +514,7 @@ object ScaleOps extends QueryModule {
     * 1-row corpus count attaches by broadcast. */
   def q153TfidfCosine(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val tok = docs.select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-    val dict = tok.select(col("tok")).distinct().withColumn("h", polyHash(col("tok")))
-    val wp = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val occ = tok.join(broadcast(dict), "tok")
-      .withColumn("h1", lead(col("h"), 1).over(wp))
-      .withColumn("h2", lead(col("h"), 2).over(wp))
-      .filter(col("h2").isNotNull)
-      .select(col("doc_id"), ((col("h") * 31 + col("h1")) % P * 31 + col("h2")) % P as "sh")
+    val occ = Lsh.shingleOccurrences(Lsh.tokenHashes(docs))
     val tf = occ.groupBy(col("doc_id"), col("sh")).agg(count(lit(1)).as("tf"))
     val dfr = tf.groupBy(col("sh")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= ShingleDfCap)

@@ -198,98 +198,25 @@ object TextOps extends QueryModule {
     * The oracle runs the *same* LSH pipeline (identical integer
     * arithmetic), so candidate sets match exactly — no recall slack.
     *
-    * The pipeline is factored into shared building blocks
-    * ([[tokenHashes]] → [[shingleSet]] → [[lshDocsFrom]] →
-    * [[lshVerifiedPairs]]) because six other graded queries (q55, q178,
-    * q184, q194, q245, q258, q261) embed it as their input stage —
-    * sharing the PERSISTED intermediates inside one query's plan removes
-    * whole duplicate tokenize/shingle passes (optimization guide §2.4:
-    * remove redundant passes; §1.2: fix the distributed algorithm first).
-    * Cache scope: one query invocation — the bench/Verify harness runs
-    * clearCache() between queries, so nothing leaks across queries. */
+    * The pipeline's steps live in [[Lsh]]; q55, q178, q184, q194, q245,
+    * q258 and q261 embed q35's pairs as their input stage through
+    * [[lshDocs]] and [[Lsh.verifiedPairs]], so each shares the PERSISTED
+    * signature relation inside its plan instead of running a duplicate
+    * tokenize/shingle pass (optimization guide §2.4: remove redundant
+    * passes; §1.2: fix the distributed algorithm first). */
   def q35MinHashLsh(s: SparkSession, d: String): DataFrame =
-    lshVerifiedPairs(lshDocs(s, d)).orderBy(col("da"), col("db"))
+    Lsh.verifiedPairs(lshDocs(s, d)).orderBy(col("da"), col("db"))
 
-  /** Dictionary-encoded token occurrences: (doc_id, pos, h). The portable
-    * polynomial hash is an interpreted higher-order `aggregate` over the
-    * token's chars, so it runs once per DISTINCT token (~vocab size),
-    * never per occurrence — every per-occurrence path downstream is
-    * codegen'd. (Measured: inlining the hash per occurrence as a
-    * row-local array pipeline removes three shuffles but is 40× slower
-    * at sf0.1 — interpreted HOF-per-occurrence dominates everything.) */
-  private[operators] def tokenHashRel(s: SparkSession, d: String): DataFrame = {
-    val tok = Tables.documents(s, d)
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-    val dict = tok.select(col("tok")).distinct()
-      .withColumn("h", polyHash(col("tok")))
-    tok.join(broadcast(dict), "tok").select(col("doc_id"), col("pos"), col("h"))
-  }
-
-  /** Distinct 3-gram shingle hashes per doc: (doc_id, sh). One shuffle
-    * keyed by doc_id, linear in corpus size; the distinct reuses the
-    * window's doc_id partitioning (no extra exchange). NOT persisted:
-    * the df-cap aggregate and the anti-join both read it, but their
-    * subtrees are canonically identical up to the window exchange, so
-    * Spark's runtime exchange reuse already computes the pass once — a
-    * persist here was measured 8–20% SLOWER across the whole q35 family
-    * (materialization barrier + cache-write cost for work that was
-    * already shared; the guide §1.1 "ideal plan" gotcha). */
-  private[operators] def shingleSet(th: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wp = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    th.withColumn("h1", lead(col("h"), 1).over(wp))
-      .withColumn("h2", lead(col("h"), 2).over(wp))
-      .filter(col("h2").isNotNull)
-      .select(col("doc_id"),
-        ((col("h") * 31 + col("h1")) % P * 31 + col("h2")) % P as "sh")
-      .distinct()
-  }
-
-  /** Per-doc MinHash signatures + df-capped shingle set, PERSISTED
-    * (reused by the band build and both verify-side fetch joins; a few
-    * MB at sf0.1 — |docs| × |shingle set|, MEMORY_AND_DISK,
-    * LRU-evictable).
-    *
-    * df-cap (ScaleOps.ShingleDfCap): stopword shingles sit in huge
-    * posting lists and blow up both the band-bucket collision count
-    * and the verify-side set intersections; dropping them bounds all
-    * downstream work. The hot list is tiny → broadcast anti-join. */
-  private[operators] def lshDocsFrom(sh0: DataFrame): DataFrame = {
-    val hot = sh0.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > ScaleOps.ShingleDfCap).select(col("sh"))
-    val shingles = sh0.join(broadcast(hot), Seq("sh"), "left_anti")
-    // MinHash signatures as plain min-aggregates (map-side partial agg);
-    // shingle set kept for the exact-Jaccard verify step.
-    val sigAggs = (0 until 8).map(i =>
-      min((lit(MinHashA(i)) * col("sh") + lit(MinHashB(i))) % P).as(s"sig$i"))
-    shingles.groupBy(col("doc_id"))
-      .agg(sigAggs.head, (sigAggs.tail :+ collect_set(col("sh")).as("sh_set")): _*)
-      .persist()
-  }
-
-  private[operators] def lshDocs(s: SparkSession, d: String): DataFrame =
-    lshDocsFrom(shingleSet(tokenHashRel(s, d)))
-
-  /** Verified near-dup pairs (da, db, jac ≥ 0.5), UNORDERED — consumers
-    * that aggregate or join (q55/q178/q184/q194/q245/q261) skip q35's
-    * final global sort. */
-  private[operators] def lshVerifiedPairs(docs: DataFrame): DataFrame = {
-    // LSH: 4 bands of 2 signatures; same-bucket join yields candidates.
-    val bands = docs.select(col("doc_id"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"), col(s"sig${2 * b}").as("v0"), col(s"sig${2 * b + 1}").as("v1"))): _*)).as("bk"))
-    val cand = bands.as("l").join(bands.as("r"),
-        col("l.bk") === col("r.bk") && col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("da"), col("r.doc_id").as("db")).distinct()
-    // exact Jaccard verify on the (few) candidates only.
-    val a = docs.select(col("doc_id").as("da"), col("sh_set").as("sa"))
-    val b = docs.select(col("doc_id").as("db"), col("sh_set").as("sb"))
-    cand.join(a, "da").join(b, "db")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("double"))
-      .withColumn("jac", round(col("inter") /
-        (size(col("sa")) + size(col("sb")) - col("inter")), 6))
-      .filter(col("jac") >= 0.5)
-      .select(col("da"), col("db"), col("jac"))
+  /** Per-doc MinHash signatures + df-capped shingle set (doc_id,
+    * sig0..sig7, sh_set), PERSISTED: the band build and both verify-side
+    * fetch joins read it (a few MB at sf0.1 — |docs| × |shingle set|,
+    * MEMORY_AND_DISK, LRU-evictable). Cache scope: one query invocation
+    * — the bench/Verify harness runs clearCache() between queries, so
+    * nothing leaks across queries; a long-lived session must call
+    * clearCache() between calls. */
+  private[operators] def lshDocs(s: SparkSession, d: String): DataFrame = {
+    val sh0 = Lsh.shingles(Lsh.tokenHashes(Tables.documents(s, d)))
+    Lsh.signatures(Lsh.dropHot(sh0, Lsh.hot(sh0))).persist()
   }
 
   /** The q35 LSH pipeline as a CTE chain, shared by q35's oracle and
@@ -341,7 +268,7 @@ object TextOps extends QueryModule {
     * returning partial labels). The oracle computes the same components
     * with a recursive CTE. */
   def q55DupClusters(s: SparkSession, d: String): DataFrame =
-    clustersFromPairs(lshVerifiedPairs(lshDocs(s, d))).orderBy(col("doc_id"))
+    clustersFromPairs(Lsh.verifiedPairs(lshDocs(s, d))).orderBy(col("doc_id"))
 
   /** Min-label-propagation connected components over a verified pair
     * set: (id, label), clustered docs only. Shared by every consumer of
@@ -409,7 +336,7 @@ object TextOps extends QueryModule {
     // but an inner join against the size aggregate cannot be pruned by
     // Catalyst, so going through q55 paid a groupBy+join for a column
     // this query drops (§2.3: don't compute what you throw away).
-    val clusters = ccLabels(lshVerifiedPairs(lshDocs(s, d)))
+    val clusters = ccLabels(Lsh.verifiedPairs(lshDocs(s, d)))
       .select(col("id").as("doc_id"), col("label").as("cluster_id"))
     val bucket = (col("cluster_id") * lit(2654435761L)) % lit(100L)
     Tables.documents(s, d).select(col("doc_id"))
@@ -947,37 +874,16 @@ object TextOps extends QueryModule {
     * per-document LSH relation (doc_id, sig0..7, sh_set) for ALL
     * documents. Shared by q183 and the streaming twin's index build. */
   def deltaLshRelations(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val tok = Tables.documents(s, d)
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-    val dict = tok.select(col("tok")).distinct()
-      .withColumn("h", polyHash(col("tok")))
-    val wp = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val sh0 = tok.join(broadcast(dict), "tok")
-      .withColumn("h1", lead(col("h"), 1).over(wp))
-      .withColumn("h2", lead(col("h"), 2).over(wp))
-      .filter(col("h2").isNotNull)
-      .select(col("doc_id"),
-        ((col("h") * 31 + col("h1")) % P * 31 + col("h2")) % P as "sh")
-      .distinct()
+    val sh0 = Lsh.shingles(Lsh.tokenHashes(Tables.documents(s, d)))
       .persist() // read by the df-cap count and both band builds
     // index statistics: hot shingles determined by the standing side only
-    val hot = sh0.filter(!DeltaPred).groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > ScaleOps.ShingleDfCap).select(col("sh"))
-    val capped = sh0.join(broadcast(hot), Seq("sh"), "left_anti")
-    val sigAggs = (0 until 8).map(i =>
-      min((lit(MinHashA(i)) * col("sh") + lit(MinHashB(i))) % P).as(s"sig$i"))
-    val docs = capped.groupBy(col("doc_id"))
-      .agg(sigAggs.head, (sigAggs.tail :+ collect_set(col("sh")).as("sh_set")): _*)
-      .persist()
+    val hot = Lsh.hot(sh0.filter(!DeltaPred))
+    val docs = Lsh.signatures(Lsh.dropHot(sh0, hot)).persist()
     (hot, docs)
   }
 
   /** Band keys (doc_id, bk=(band,v0,v1)) for an LSH doc relation. */
-  def bandsOf(df: DataFrame): DataFrame = df.select(col("doc_id"),
-    explode(array((0 until 4).map(b =>
-      struct(lit(b).as("band"), col(s"sig${2 * b}").as("v0"),
-        col(s"sig${2 * b + 1}").as("v1"))): _*)).as("bk"))
+  def bandsOf(df: DataFrame): DataFrame = df.select(col("doc_id"), Lsh.bandKey)
 
   def q183DeltaDedup(s: SparkSession, d: String): DataFrame = {
     val (_, docs) = deltaLshRelations(s, d)
@@ -987,15 +893,7 @@ object TextOps extends QueryModule {
     val cand = bandsOf(docs.filter(isDelta)).as("l")
       .join(bandsOf(docs.filter(!isDelta)).as("r"), col("l.bk") === col("r.bk"))
       .select(col("l.doc_id").as("da"), col("r.doc_id").as("db")).distinct()
-    val a = docs.select(col("doc_id").as("da"), col("sh_set").as("sa"))
-    val b = docs.select(col("doc_id").as("db"), col("sh_set").as("sb"))
-    cand.join(a, "da").join(b, "db")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("double"))
-      .withColumn("jac", round(col("inter") /
-        (size(col("sa")) + size(col("sb")) - col("inter")), 6))
-      .filter(col("jac") >= 0.5)
-      .select(col("da"), col("db"), col("jac"))
-      .orderBy(col("da"), col("db"))
+    Lsh.verify(cand, docs).orderBy(col("da"), col("db"))
   }
 
   val q183Sql: String = {
@@ -1040,7 +938,7 @@ object TextOps extends QueryModule {
     * score, and how many members it displaced. */
   def q184KeepBest(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val clusters = clustersFromPairs(lshVerifiedPairs(lshDocs(s, d)))
+    val clusters = clustersFromPairs(Lsh.verifiedPairs(lshDocs(s, d)))
       .filter(col("cluster_size") >= 2)
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
     // Join FIRST, tokenize after: the score is only read for cluster

@@ -26,7 +26,7 @@ object WeightOps extends QueryModule {
     // below over ALL docs anyway (singleton weights need it), so its
     // sizes join + final sort were pure waste here (§2.3/§2.4).
     val clustered = TextOps.ccLabels(
-        TextOps.lshVerifiedPairs(TextOps.lshDocs(s, d)))
+        Lsh.verifiedPairs(TextOps.lshDocs(s, d)))
       .select(col("id").as("doc_id"), col("label").as("cluster_id"))
     val all = Tables.documents(s, d).select(col("doc_id"), col("source"))
       .join(clustered, Seq("doc_id"), "left")

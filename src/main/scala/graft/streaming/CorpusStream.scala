@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.Portable._
+import graft.operators.Lsh
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,19 +11,37 @@ import org.apache.spark.sql.functions._
   * with stream-static joins — the continuous form of the daily-crawl
   * batch op.
   *
-  * The batch pipeline computes shingles with a `lead()` window over token
-  * positions (a performance choice — the portable hash runs once per
-  * distinct token); windows are not available on streaming DataFrames, so
-  * the stream side uses the row-local array pipeline
-  * (`shingleHashes(tokenHashes(tokens(text)))`), which produces the SAME
-  * distinct shingle-hash set per document — the twin test asserts pair
-  * parity with the batch operator. Everything per-row is a projection
+  * The batch pipeline ([[graft.operators.Lsh]]) computes shingles with a
+  * `lead()` window over token positions (a performance choice — the
+  * portable hash runs once per distinct token); windows are not available
+  * on streaming DataFrames, so the stream side uses the row-local array
+  * pipeline (`shingleHashes(tokenHashes(tokens(text)))`), which produces
+  * the SAME distinct shingle-hash set per document (`LshSpec` checks the
+  * sets; the twin test asserts pair parity with the batch operator). The
+  * band layout ([[graft.operators.Lsh.bandKey]]) and the Jaccard verify
+  * ([[graft.operators.Lsh.withJaccard]]) are the batch pipeline's own.
+  * Everything per-row is a projection
   * (shingle set → hot-list filter → 8 min-hash folds → 4 band keys), so
   * the stream stays append-mode with no stateful operator before the
   * joins; the only state is the final (da, db) dropDuplicates, bounded by
   * the candidate volume of the delta batch in flight.
   */
 object CorpusStream {
+
+  /** The row-local LSH signature of each row's `text`: the distinct
+    * shingle set `sa` less the frozen `hot` shingles, and the 8 min-hash
+    * folds sig0..sig7 over it. A row whose set is empty is dropped. */
+  private def rowSignatures(rows: DataFrame, hot: Seq[Long]): DataFrame = {
+    val hotArr =
+      if (hot.isEmpty) array().cast("array<bigint>")
+      else array(hot.map(lit): _*)
+    val sigs = (0 until 8).map(i => minHashSig(col("sa"), i).as(s"sig$i"))
+    rows
+      .withColumn("shl", shingleHashes(tokenHashes(tokens(col("text")))))
+      .withColumn("sa", filter(col("shl"), h => !array_contains(hotArr, h)))
+      .filter(size(col("sa")) > 0)
+      .select(col("*") +: sigs: _*)
+  }
 
   /** @param docs          streaming (doc_id, text)
     * @param hot           standing-index hot shingles (driver-collected —
@@ -32,27 +51,13 @@ object CorpusStream {
     * @param standingSets  static (db, sb) capped shingle sets */
   def deltaDedupStream(docs: DataFrame, hot: Seq[Long],
       standingBands: DataFrame, standingSets: DataFrame): DataFrame = {
-    val hotArr =
-      if (hot.isEmpty) array().cast("array<bigint>")
-      else array(hot.map(lit): _*)
-    val capped = docs
-      .withColumn("shl", shingleHashes(tokenHashes(tokens(col("text")))))
-      .withColumn("sa", filter(col("shl"), h => !array_contains(hotArr, h)))
-      .filter(size(col("sa")) > 0)
-    val sigs = (0 until 8).map(i => minHashSig(col("sa"), i).as(s"sig$i"))
-    val withSigs = capped.select(col("doc_id") +: col("sa") +: sigs: _*)
-    val bands = withSigs.select(col("doc_id").as("da"), col("sa"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"), col(s"sig${2 * b}").as("v0"),
-          col(s"sig${2 * b + 1}").as("v1"))): _*)).as("bk"))
+    val bands = rowSignatures(docs, hot)
+      .select(col("doc_id").as("da"), col("sa"), Lsh.bandKey)
       .select(col("da"), col("sa"),
         col("bk.band").as("band"), col("bk.v0").as("v0"), col("bk.v1").as("v1"))
-    bands
+    Lsh.withJaccard(bands
       .join(standingBands, Seq("band", "v0", "v1")) // stream-static probe
-      .join(standingSets, "db")                     // fetch index-side set
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("double"))
-      .withColumn("jac", round(col("inter") /
-        (size(col("sa")) + size(col("sb")) - col("inter")), 6))
+      .join(standingSets, "db"))                    // fetch index-side set
       .filter(col("jac") >= 0.5)
       .select(col("da"), col("db"), col("jac"))
       .dropDuplicates("da", "db") // multi-band collisions emit once
@@ -372,19 +377,7 @@ object CorpusStream {
     * @param rows streaming (delta, text)
     * @param hot  frozen hot-shingle list (bounded by the df-cap) */
   def tombstoneBandStream(rows: DataFrame, hot: Seq[Long]): DataFrame = {
-    val hotArr =
-      if (hot.isEmpty) array().cast("array<bigint>")
-      else array(hot.map(lit): _*)
-    val capped = rows
-      .withColumn("shl", shingleHashes(tokenHashes(tokens(col("text")))))
-      .withColumn("sa", filter(col("shl"), h => !array_contains(hotArr, h)))
-      .filter(size(col("sa")) > 0)
-    val sigs = (0 until 8).map(i => minHashSig(col("sa"), i).as(s"sig$i"))
-    val withSigs = capped.select(col("delta").cast("long").as("delta") +: sigs: _*)
-    withSigs.select(col("delta"),
-        explode(array((0 until 4).map(b =>
-          struct(lit(b.toLong).as("band"), col(s"sig${2 * b}").as("v0"),
-            col(s"sig${2 * b + 1}").as("v1"))): _*)).as("bk"))
+    rowSignatures(rows, hot).select(col("delta").cast("long").as("delta"), Lsh.bandKey)
       .groupBy(col("bk.band").as("band"), col("bk.v0").as("v0"),
         col("bk.v1").as("v1"))
       .agg(sum(col("delta")).as("n_live"))

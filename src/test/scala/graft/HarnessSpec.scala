@@ -37,6 +37,17 @@ class HarnessSpec extends AnyFunSuite {
       s"oracle-less queries drifted: ${((q -- o) -- RowsOnly).mkString(", ")}")
   }
 
+  test("Verify writes every oracle, or only those of the queries it is given") {
+    import scala.jdk.CollectionConverters._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    def parsed(only: Option[Set[String]]): Map[String, String] =
+      mapper.readTree(Verify.oracleJson(only)).properties().asScala
+        .map(e => e.getKey -> e.getValue.asText).toMap
+    assert(parsed(None) == SparkEntry.oracleSql)
+    val some = Set("q35_minhash_lsh", "q183_delta_dedup", "q337_band_erasure")
+    assert(parsed(Some(some)) == SparkEntry.oracleSql.filter { case (k, _) => some(k) })
+  }
+
   // single-row scalar aggregates: order is trivially deterministic
   private val SingleRow = Set("q96_tpch_q6", "q97_tpch_q14", "q105_tpch_q17",
     "q106_tpch_q19", "q122_funnel", "q141_curation_funnel", "q164_funnel_latency",

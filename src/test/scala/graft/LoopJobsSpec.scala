@@ -4,12 +4,19 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Spark jobs launched by each driver-iterated loop query at sf0.001,
-  * builder and action together (the action is a noop write). Every round
-  * trip the driver makes is a job, so a ceiling here pins "no extra round
-  * trips" for the loop queries. Ceilings are the counts measured before
-  * the loops moved onto [[graft.operators.Iterate]], less the one job per
-  * round that q194's lazy state checkpoint saves. */
+/** Spark jobs launched at sf0.001 by each driver-iterated loop query and
+  * by each query of the LSH family ([[graft.operators.Lsh]]), builder and
+  * action together (the action is a noop write). Every round trip the
+  * driver makes is a job, so a ceiling here pins "no extra round trips"
+  * for the loop queries and the LSH family. The loop ceilings are the
+  * counts measured before the loops moved onto
+  * [[graft.operators.Iterate]], less the one job per round that q194's
+  * lazy state checkpoint saves; the LSH ceilings are the counts measured
+  * before the pipeline's steps moved into [[graft.operators.Lsh]].
+  * q274, q282, q284 and q305 are left out: their counts depend on
+  * whether the hybrid-index artifact is built or adopted in the call.
+  * q258 is left out too: one tree launched 30 jobs in some runs and 31
+  * in another, so a ceiling would fail at random. */
 class LoopJobsSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -22,7 +29,17 @@ class LoopJobsSpec extends AnyFunSuite {
     "q261_chain_merge" -> 43,
     "q151_pagerank" -> 20,
     "q203_sssp_weighted" -> 23,
-    "q297_kcore" -> 37)
+    "q297_kcore" -> 37,
+    "q35_minhash_lsh" -> 16,
+    "q40_ngram_jaccard" -> 18,
+    "q153_tfidf_cosine" -> 19,
+    "q163_containment" -> 18,
+    "q183_delta_dedup" -> 18,
+    "q242_lsh_tuning" -> 17,
+    "q275_lsh_decontaminate" -> 20,
+    "q337_band_erasure" -> 26,
+    "q235_rrf_hybrid" -> 20,
+    "q246_rank_overlap" -> 23)
 
   /** Counts the jobs started under one job group. */
   private final class JobCounter(group: String) extends SparkListener {
